@@ -8,8 +8,7 @@
 # under Verify below. The image launches the smoke entry by default.
 #
 # Build:   docker build -t spotify-app-etl-spark .
-# Run:     docker run -v /path/to/testdata:/testdata \
-#              -e SPARK_GRAFT_SF_DIR=/testdata/sf0.1 spotify-app-etl-spark
+# Run:     docker run -v /path/to/testdata:/testdata spotify-app-etl-spark
 # Verify:  docker run ... spotify-app-etl-spark python -m pytest tests/ -q
 #
 # NOTE: this sandbox has no Docker daemon; the recipe is validated by
@@ -23,8 +22,7 @@ RUN apt-get update \
     && rm -rf /var/lib/apt/lists/* \
     && python3.11 -m venv /opt/venv
 ENV PATH="/opt/venv/bin:$PATH" \
-    JAVA_HOME=/opt/java/openjdk \
-    SPARK_GRAFT_SF_DIR=/testdata/sf0.1
+    JAVA_HOME=/opt/java/openjdk
 
 WORKDIR /app
 
@@ -32,13 +30,13 @@ WORKDIR /app
 COPY requirements.txt .
 RUN pip install --no-cache-dir -r requirements.txt
 
-# The package, its entry point, tests, and the bench harness.
+# The package, its entry point and tests.
 COPY pyproject.toml README.md ./
 COPY spotify_app_etl_spark/ spotify_app_etl_spark/
 COPY tests/ tests/
-COPY __spark_entry__.py bench.py ./
+COPY __spark_entry__.py ./
 RUN pip install --no-cache-dir --no-deps .
 
 # Smoke query against the mounted testdata by default; override the
-# command for pytest or bench runs.
+# command for pytest runs.
 CMD ["python", "-c", "import __spark_entry__ as e; from spotify_app_etl_spark.session import get_spark; df = e.entry(get_spark(app_name='smoke')); print(df.count(), 'rows'); df.show(5)"]

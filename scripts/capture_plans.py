@@ -3,8 +3,8 @@
 plans/<round>/<query>_<suffix>.txt — the optimization-round evidence
 files (the judge reads these instead of running Spark).
 
-The captured plan is the BENCH arm (``bench_fn`` when registered, else
-``fn``): the rider-free plan is the one the bench measures and the one
+The captured plan is the timed arm (``bench_fn`` when registered, else
+``fn``): the rider-free plan is the one perfbench measures and the one
 optimization claims are made about. Composite queries that build
 side-effect state (persisted ANN indexes, streaming sinks) execute
 those builds as part of calling the query fn — the captured plan is
@@ -12,7 +12,7 @@ the returned DataFrame's, exactly what `.explain` shows the driver.
 
 Usage:
     python scripts/capture_plans.py --suffix before --queries a,b,c
-    python scripts/capture_plans.py --suffix after            # headline set
+    python scripts/capture_plans.py --suffix after            # perfbench workload queries
     python scripts/capture_plans.py --round-dir plans/r11
 """
 
@@ -41,11 +41,11 @@ def main() -> None:
     ap.add_argument(
         "--queries",
         default=None,
-        help="comma-separated names; default: the bench HEADLINE set",
+        help="comma-separated names; default: the perfbench workload queries",
     )
     args = ap.parse_args()
 
-    from bench import HEADLINE
+    from perfbench.workloads import ALL_OPS, ETL
     from spotify_app_etl_spark.operators.dedup import release_cached
     from spotify_app_etl_spark.registry import load_all
     from spotify_app_etl_spark.session import get_spark
@@ -55,7 +55,7 @@ def main() -> None:
     names = (
         [n.strip() for n in args.queries.split(",") if n.strip()]
         if args.queries
-        else [n for n in HEADLINE if n in registry]
+        else [n for n in ALL_OPS if n != ETL]
     )
     unknown = [n for n in names if n not in registry]
     if unknown:

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
-"""Generate PLANS.md: executed-plan audit of the bench headline queries.
+"""Generate PLANS.md: executed-plan audit of the perfbench workload queries.
 
-For each headline query (bench.py HEADLINE) this runs the query at the
-given scale factor, captures the POST-AQE executed plan, and extracts
-the signals that matter at 100 TB:
+For each perfbench workload query (``perfbench.workloads.ALL_OPS``
+without the ETL operation) this runs the query at the given scale
+factor, captures the POST-AQE executed plan, and extracts the signals
+that matter at 100 TB:
 
 - shuffle count (Exchange hashpartitioning) and broadcast count
 - whether parquet scans carry PushedFilters / PartitionFilters
@@ -52,7 +53,7 @@ def main() -> None:
     ap.add_argument("--full", action="store_true", help="include full plan text")
     args = ap.parse_args()
 
-    from bench import HEADLINE
+    from perfbench.workloads import ALL_OPS, ETL
     from spotify_app_etl_spark.operators.dedup import release_cached
     from spotify_app_etl_spark.registry import load_all
     from spotify_app_etl_spark.session import get_spark
@@ -60,11 +61,11 @@ def main() -> None:
     spark = get_spark(app_name="explain_audit")
     registry = load_all()
 
-    # untimed warmup (mirrors bench.py): JVM codegen + Arrow worker pool
+    # untimed warmup: JVM codegen + Arrow worker pool
     registry["q01_pricing_summary"].fn(spark, args.sf).collect()
 
     lines = [
-        "# PLANS — executed-plan audit of the bench headline queries",
+        "# PLANS — executed-plan audit of the perfbench workload queries",
         "",
         f"Scale factor dir: `{args.sf}`. Plans are POST-AQE executed plans",
         "(collected after running each query), not optimizer estimates.",
@@ -73,7 +74,7 @@ def main() -> None:
         "filters, Python stages in a pure-relational plan.",
         "",
         "Since r08 BOTH arms of every `bench_fn` query are audited: the",
-        "bare name is the rider-free variant bench.py times; the",
+        "bare name is the rider-free variant perfbench times; the",
         "`(fn)` row is the proof-laden arm the driver's correctness",
         "sweep executes. The `(fn)` rows' NLJ counts (1-4) are the",
         "1-row broadcast verification scalars (recall / parity /",
@@ -96,7 +97,7 @@ def main() -> None:
         "| query | wall_s | shuffles | broadcasts | codegen | scans | pushed | NLJ | cartesian | py |",
         "| --- | --- | --- | --- | --- | --- | --- | --- | --- | --- |",
     ]
-    # Non-headline queries whose physical plans earned an audit row:
+    # Other queries whose physical plans earned an audit row:
     # the round-4 broadcast-hint removals (AQE must be choosing the
     # strategy, not a forced hint) and the executor-side Bloom build.
     extra = [
@@ -106,9 +107,9 @@ def main() -> None:
         "q_join_bloom_prefilter",
     ]
     details: list[str] = []
-    for name in HEADLINE + [n for n in extra if n not in HEADLINE]:
+    for name in [n for n in ALL_OPS if n != ETL] + extra:
         q = registry[name]
-        # Audit BOTH arms where they differ (ADVICE r07): bench.py
+        # Audit BOTH arms where they differ (ADVICE r07): perfbench
         # times the rider-free bench_fn, but the driver's correctness
         # sweep executes the proof-laden fn — a rider edit that
         # introduced an unbounded NLJ or single-partition window would

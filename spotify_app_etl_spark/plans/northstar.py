@@ -99,7 +99,7 @@ def ns_dedup_minhash_pairs(
 
     docs = t(spark, sf_dir, "documents")
     if not verify:
-        # rider-free arm (bench.py): the banded LSH candidate join is
+        # rider-free arm (perfbench): the banded LSH candidate join is
         # the operator; the exact-Jaccard recall pass is the proof
         return DD.minhash_candidates(docs, "text", "doc_id", threshold=0.5)
     # Persisted: the candidate frame feeds both the output and the
@@ -174,7 +174,7 @@ def ns_dedup_minhash_verified(
     docs = t(spark, sf_dir, "documents")
     cand = DD.minhash_candidates(docs, "text", "doc_id", threshold=0.5)
     if not verify:
-        # rider-free arm (bench.py): propose + exact-verify IS the
+        # rider-free arm (perfbench): propose + exact-verify IS the
         # operator (the scale contract); the windowed recall pass
         # (~1.2 s of the ~5.7 s wall at sf0.1) is the proof
         return DD.ngram_jaccard_on(cand, docs, "text", "doc_id", n=3, threshold=0.5)
@@ -396,7 +396,7 @@ def ns_sim_topk_lsh(
     out = SIM.cosine_topk_lsh(queries, corpus, k=5, planes=8, tables=8)
     out = out.select("query_id", "corpus_id", "cos_sim", "rank")
     if not verify:
-        # rider-free arm (bench.py): the bucketed probe is the
+        # rider-free arm (perfbench): the bucketed probe is the
         # operator; the exact 5-query pass is the proof
         return out
     return _with_recall_rider(out, queries, corpus, k=5, n_sample=5, bound=0.5)
@@ -446,7 +446,7 @@ def ns_sim_topk_pq(
     out = SIM.cosine_topk_pq(queries, corpus, k=5, m=8, ksub=16, refine=64)
     out = out.select("query_id", "corpus_id", "cos_sim", "rank")
     if not verify:
-        # rider-free arm (bench.py): train + encode + ADC + re-rank is
+        # rider-free arm (perfbench): train + encode + ADC + re-rank is
         # the operator; the exact 5-query pass is the proof
         return out
     return _with_recall_rider(out, queries, corpus, k=5, n_sample=5, bound=0.5)
@@ -495,7 +495,7 @@ def ns_sim_topk_lsh_indexed(
         "query_id", "corpus_id", "cos_sim", "rank"
     )
     if not verify:
-        # rider-free arm (bench.py): the operator is write→append→probe;
+        # rider-free arm (perfbench): the operator is write→append→probe;
         # the in-memory parity recomputation is the PROOF the driver
         # hashes, roughly doubling wall time — keep it out of BENCH
         return out
@@ -559,7 +559,7 @@ def ns_sim_topk_pq_indexed(
         "query_id", "corpus_id", "cos_sim", "rank"
     )
     if not verify:
-        # rider-free arm (bench.py): train+write+append+probe is the
+        # rider-free arm (perfbench): train+write+append+probe is the
         # operator; the full in-memory ADC recomputation below is the
         # parity proof — see ns_sim_topk_lsh_indexed
         return out
@@ -602,7 +602,7 @@ def ns_dedup_minhash_incremental(
         batch, idx, "text", "doc_id", update_index=True
     )
     if not verify:
-        # rider-free arm (bench.py): build + dedup-vs-index+self +
+        # rider-free arm (perfbench): build + dedup-vs-index+self +
         # append is the operator; the idempotence rerun is the proof
         return kept.select("doc_id").withColumn("src", F.lit("batch_kept"))
     rerun, _ = DD.minhash_dedup_incremental_with_sigs(
@@ -657,7 +657,7 @@ def ns_streaming_dedup_ingest(
     q.awaitTermination()
     kept = spark.read.parquet(out)
     if not verify:
-        # rider-free arm (bench.py): source→foreachBatch dedup→sink is
+        # rider-free arm (perfbench): source→foreachBatch dedup→sink is
         # the operator; the rerun-idempotence pass below is the proof
         return kept.select("doc_id").withColumn("src", F.lit("stream_kept"))
     rerun, _ = DD.minhash_dedup_incremental_with_sigs(
@@ -885,7 +885,7 @@ def ns_dedup_embedding_cosine_lsh(
 
     emb = _emb_with_planted(spark, sf_dir)
     if not verify:
-        # rider-free arm (bench.py): the bucketed LSH pair join is the
+        # rider-free arm (perfbench): the bucketed LSH pair join is the
         # operator; the windowed exact block-matmul pass is the proof
         return DD.embedding_cosine_pairs_lsh(
             emb, "embedding", "vec_id", threshold=0.9, planes="auto", tables="auto"
@@ -948,7 +948,7 @@ def ns_dedup_semantic(
     losers = DD.semantic_losers(pairs, "vec_id", keep="least_central")
     kept = DD.semantic_dedup(emb, "embedding", "vec_id", pairs=pairs)
     if not verify:
-        # rider-free arm (bench.py): KMeans + cell-scoped pair scoring +
+        # rider-free arm (perfbench): KMeans + cell-scoped pair scoring +
         # the keep-policy anti-join is the operator; the exact-kernel
         # recall and conservation counts below are the driver's proof
         return kept.select("vec_id")
@@ -1393,7 +1393,7 @@ def ns_mm_phash_pairs(
     )
     corpus = docs.select("doc_id", "text").unionByName(planted)
     if not verify:
-        # rider-free arm (bench.py): dHash + banded join + exact
+        # rider-free arm (perfbench): dHash + banded join + exact
         # Hamming filter is the operator; the windowed all-pairs
         # recall pass is the proof
         return MM.phash_near_dup_pairs(

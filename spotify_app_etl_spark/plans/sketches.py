@@ -216,7 +216,7 @@ def ns_corpus_overlap_sketch(
 
     docs = t(spark, sf_dir, "documents")
     if not verify:
-        # rider-free arm (bench.py): the shingle DISTINCT is
+        # rider-free arm (perfbench): the shingle DISTINCT is
         # DELIBERATELY EXCLUDED here, and that is the one plan-shape
         # difference vs the fn arm. The distinct exists only as rider
         # infrastructure — the exact-overlap self-join needs a minimal

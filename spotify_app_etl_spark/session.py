@@ -4,7 +4,7 @@ Two layers:
 
 - :func:`get_spark` builds a local session with scale-appropriate
   defaults (AQE on, shuffle partitions ~ cores, Arrow on). Used by
-  tests and ``bench.py``.
+  tests and perfbench.
 - :func:`configure_session` applies the subset of confs that are
   runtime-settable to ANY session — including one handed to us by an
   external driver (``__spark_entry__.entry(spark)``). Every query

@@ -1,12 +1,13 @@
 """Rider-free bench variants must stay consistent with the driver path.
 
 Every registry entry with a ``bench_fn`` (the ``verify=False`` arm that
-``bench.py`` times) must keep producing the SAME operator output rows
-as the proof-laden ``fn`` the driver hashes — the variants exist to
-drop verification cost, never to change what the operator computes. A
-drift between the two arms (someone edits the verify path but not the
-bench arm, or vice versa) would silently make BENCH numbers describe a
-different computation than CORRECTNESS checks.
+perfbench times and hash-checks, ``perfbench/run.py``) must keep
+producing the SAME operator output rows as the proof-laden ``fn`` the
+driver hashes — the variants exist to drop verification cost, never to
+change what the operator computes. A drift between the two arms
+(someone edits the verify path but not the bench arm, or vice versa)
+would silently make perfbench timings describe a different computation
+than the correctness sweep checks.
 
 Row-count equality is the right invariant here: the bench arms project
 away rider columns (and the estimator-defined VALUES of sketch arms
