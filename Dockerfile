@@ -4,11 +4,12 @@
 # Spark needs a JVM, so the base is a JRE image with Python installed
 # rather than python-slim with a JRE bolted on. Tests are NOT run at
 # build time (they need the generated parquet testdata mounted at
-# /testdata — see TESTDATA.md); run them by overriding the CMD as shown
+# /root/testdata, the directory the smoke entry and tests read — see
+# TESTDATA.md); run them by overriding the CMD as shown
 # under Verify below. The image launches the smoke entry by default.
 #
 # Build:   docker build -t spotify-app-etl-spark .
-# Run:     docker run -v /path/to/testdata:/testdata spotify-app-etl-spark
+# Run:     docker run -v /path/to/testdata:/root/testdata spotify-app-etl-spark
 # Verify:  docker run ... spotify-app-etl-spark python -m pytest tests/ -q
 #
 # NOTE: this sandbox has no Docker daemon; the recipe is validated by

@@ -21,17 +21,19 @@ if _REPO_ROOT not in sys.path:
 
 from spotify_app_etl_spark import registry  # noqa: E402
 from spotify_app_etl_spark.plans.relational import pricing_summary  # noqa: E402
+from spotify_app_etl_spark.session import configure_session  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1-style pricing summary) on sf0.001."""
-    return pricing_summary(spark, SMOKE_SF_DIR)
+    return pricing_summary(configure_session(spark), SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Named queries: each callable takes (spark, sf_dir) → DataFrame."""
+    """Named queries: each callable takes (spark, sf_dir) → DataFrame
+    and configures ``spark`` before it runs."""
     return registry.queries()
 
 

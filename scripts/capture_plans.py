@@ -46,7 +46,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from perfbench.workloads import ALL_OPS, ETL
-    from spotify_app_etl_spark.operators.dedup import release_cached
+    from spotify_app_etl_spark.operators.persist import release_cached
     from spotify_app_etl_spark.registry import load_all
     from spotify_app_etl_spark.session import get_spark
 

@@ -25,6 +25,11 @@ Spark-first design decisions:
 - **Enrichment joins, not loops.** Audio features fetched via
   sources.rest.batched_lookup (≤100 ids/request, dedup-before-fetch
   like :250) and joined back to tracks as a broadcast join.
+
+Every function takes a session already configured by
+:func:`spotify_app_etl_spark.session.configure_session`, which also
+ships this package to the Python workers the fan-out and the lookup
+run on.
 """
 
 from __future__ import annotations
@@ -39,7 +44,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from spotify_app_etl_spark import schemas
-from spotify_app_etl_spark.session import configure_session
 from spotify_app_etl_spark.sources import rest
 from spotify_app_etl_spark.sources.spotify_mock import (
     MockSpotifyTransport,
@@ -51,7 +55,6 @@ _RAW = "payload string"
 
 
 def _json_df(spark: SparkSession, items: list[dict]) -> DataFrame:
-    configure_session(spark)
     return spark.createDataFrame(
         [(json.dumps(item),) for item in items], schema=_RAW
     )
@@ -116,10 +119,6 @@ def extract_playlist_tracks(
     transport is a real API; the in-process mock runs unthrottled.
     Null-track items are dropped declaratively after the flatten (:106).
     """
-    # The fetch closure's globals (rest, schemas) pickle by module
-    # reference — ship the package to workers before launching tasks.
-    configure_session(spark)
-
     def fetch(parts: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bucket = (
             rest.TokenBucket(rate=rate_per_partition, burst=5.0)
@@ -225,7 +224,6 @@ def enrich_audio_features(
     """Union+distinct track ids (:250-251, A11) → batched lookup (A3)
     over ``transport``'s ``/audio-features`` endpoint (direct mock fn
     when no transport is given — standalone/unit use only)."""
-    configure_session(spark)  # batched_lookup runs mapInPandas on workers
     ids = (
         playlist_tracks.select("id")
         .union(saved_tracks.select("id"))
@@ -285,10 +283,11 @@ def run_pipeline(
     # persist: consumed twice (membership output + the distinct-ids feed
     # of the audio-features lookup) — without it the distributed REST
     # fan-out would execute twice. Registered with the session-wide
-    # scoped-cache list (operators.dedup._PERSISTED) so a driver loop
+    # scoped-cache list (operators.persist._PERSISTED) so a driver loop
     # calling run_pipeline repeatedly doesn't accumulate one cached
-    # fan-out table per invocation — release_cached() (called by bench
-    # and any long-lived harness) frees it once the sinks materialize.
+    # fan-out table per invocation — release_cached() (called by
+    # perfbench and any long-lived harness) frees it once the sinks
+    # materialize.
     from spotify_app_etl_spark.operators.persist import scoped_persist
 
     playlist_tracks = scoped_persist(

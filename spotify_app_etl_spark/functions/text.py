@@ -201,8 +201,7 @@ def fingerprint(
     than per-index ``substring`` (O(L) seek per char on non-ASCII);
     ``split('', '')`` yields ``['']`` and ``ascii('') = 0``, matching
     the empty-doc fold of the SQL oracle. Entirely JVM-side /
-    whole-stage codegen; :func:`fingerprint_arrow` is the Arrow-kernel
-    equivalent for very long documents.
+    whole-stage codegen.
 
     PERF: pre-project the normalized text and pass
     ``assume_normalized=True`` on hot paths (an inline normalization
@@ -217,64 +216,6 @@ def fingerprint(
         lambda acc, c: (acc * 31 + c) % F.lit(mod).cast("long"),
     )
 
-
-def fingerprint_arrow(mod: int = 2147483647):
-    """Arrow kernel equal to ``fingerprint(col, assume_normalized=True)``
-    on a PRE-NORMALIZED column — a kernel cannot run the Spark-side
-    ``normalized()`` expression, so callers pass ``normalized(text)``
-    themselves (the same contract as every Arrow kernel in the dedup
-    family; hashing raw text here would silently lose the case/
-    whitespace invariance that makes near-dup docs collide). NULL text
-    maps to NULL exactly like the expression fold — 0 would collide
-    every NULL doc with every empty doc.
-
-    The sequential Horner fold ``acc = (acc*31 + c) % m`` equals
-    ``sum(c_i * 31^(L-1-i)) % m`` — so with powers of 31 precomputed
-    mod m it vectorizes to one multiply + chunked modular sum per doc.
-    UTF-32 decode gives the code-point array without a Python loop.
-    Bit-identical to the column-expression form (asserted in tests),
-    so the DuckDB oracle still verifies it exactly.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    state = {"pw": np.array([1], dtype=np.int64)}  # pw[k] = 31^k % mod
-
-    def powers(n: int):
-        pw = state["pw"]
-        while pw.size < n:
-            ext = np.empty(pw.size * 2, dtype=np.int64)
-            ext[: pw.size] = pw
-            for i in range(pw.size, ext.size):
-                ext[i] = (ext[i - 1] * 31) % mod
-            pw = ext
-            state["pw"] = pw
-        return pw
-
-    @pandas_udf("long")
-    def fp(texts: pd.Series) -> pd.Series:
-        out: list = [None] * len(texts)
-        for i, s in enumerate(texts):
-            if s is None:
-                continue  # NULL text -> NULL hash, like the expression
-            c = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(
-                np.int64
-            )
-            if c.size == 0:
-                out[i] = 0  # fold over [''] (ascii('') == 0) -> 0
-                continue
-            pw = powers(c.size)[c.size - 1 :: -1]
-            # products < 2^52 (code point < 2^21, power < 2^31); sum in
-            # 1024-element chunks with a running mod so arbitrarily
-            # long documents never overflow int64
-            prod = (c * pw) % mod
-            acc = 0
-            for j in range(0, prod.size, 1024):
-                acc = (acc + int(prod[j : j + 1024].sum())) % mod
-            out[i] = acc
-        return pd.Series(out, dtype=object)
-
-    return fp
 
 def winnowing_fingerprints(
     df,

@@ -1,12 +1,16 @@
 """Readers and writers.
 
 Readers: typed Parquet loaders for the driver testdata (schema pinned,
-events nanosecond-timestamp normalization). Writers: Parquet/CSV/JSON
-and the JDBC snapshot-replace sink that mirrors the reference's load
-stage (spotify-etl.py:209-215, ``to_sql(..., if_exists='replace')``),
-plus the explicit ``stringify`` compatibility mode replacing the
-reference's ``df.astype(str)`` type erasure (spotify-etl.py:211;
-SURVEY.md §1.4).
+events nanosecond-timestamp normalization). They take a session already
+configured by :func:`session.configure_session` — done once where the
+session comes in (``registry.queries()``, ``__spark_entry__.entry``,
+:func:`session.get_spark`) — and never re-apply the confs themselves.
+
+Writers: Parquet/CSV/JSON and the JDBC snapshot-replace sink that
+mirrors the reference's load stage (spotify-etl.py:209-215,
+``to_sql(..., if_exists='replace')``), plus the explicit ``stringify``
+compatibility mode replacing the reference's ``df.astype(str)`` type
+erasure (spotify-etl.py:211; SURVEY.md §1.4).
 
 Scale notes: loads are plain ``spark.read.parquet`` scans — Catalyst
 handles predicate pushdown / column pruning / partition pruning, so at
@@ -20,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from spotify_app_etl_spark import schemas
-from spotify_app_etl_spark.session import configure_session
 
 TESTDATA_TABLES = tuple(schemas.TESTDATA)
 
@@ -30,12 +33,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.ts`` is parquet TIMESTAMP(MICROS, isAdjustedToUTC=false),
     which Spark reads as TIMESTAMP_NTZ — the same naive-local semantics
-    DuckDB gives it, keeping oracle comparisons exact. Older testdata
-    generations stored TIMESTAMP(NANOS,false), which has no Spark type;
-    with ``spark.sql.legacy.parquet.nanosAsLong`` that scan yields
-    epoch-nanos longs we convert to NTZ at microsecond precision.
+    DuckDB gives it, keeping oracle comparisons exact. An events file
+    written through pandas stores TIMESTAMP(NANOS,false), which has no
+    Spark type; with ``spark.sql.legacy.parquet.nanosAsLong`` (set by
+    ``configure_session``) that scan yields epoch-nanos longs we convert
+    to NTZ at microsecond precision.
     """
-    configure_session(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")

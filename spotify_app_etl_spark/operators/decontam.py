@@ -14,8 +14,7 @@ is the 100 TB corpus. So the plan is:
   exploded row count minimal),
 * hash-join on the gram string with the **benchmark gram set
   broadcast** — the one forced-broadcast in this package that is
-  justified, because the build side is dim-scale by construction (and
-  ``broadcast=False`` opts out for pathological callers),
+  justified, because the build side is dim-scale by construction,
 * one map-side-combinable aggregation per contaminated train doc.
 
 No shuffle of the training corpus ever happens: the explode and the
@@ -70,7 +69,6 @@ def contamination_report(
     id_col: str,
     *,
     n: int = 3,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Per-train-document contamination evidence.
 
@@ -79,9 +77,7 @@ def contamination_report(
     document: how many distinct grams overlap, and with how many
     distinct benchmark documents.
     """
-    bench_grams = _grams(bench, text_col, id_col, n, "bench_id")
-    if broadcast:
-        bench_grams = F.broadcast(bench_grams)
+    bench_grams = F.broadcast(_grams(bench, text_col, id_col, n, "bench_id"))
     hits = _grams(train, text_col, id_col, n, id_col).join(bench_grams, "gram")
     return hits.groupBy(id_col).agg(
         F.countDistinct("gram").alias("n_shared_grams"),
@@ -96,7 +92,6 @@ def decontaminate(
     id_col: str,
     *,
     n: int = 3,
-    broadcast: bool = True,
 ) -> DataFrame:
     """The clean corpus: train rows sharing NO word n-gram with bench.
 
@@ -111,9 +106,9 @@ def decontaminate(
     duplicated per distinct aggregate through the only exchange this
     module has.
     """
-    bench_grams = _grams(bench, text_col, id_col, n, "bench_id").select("gram")
-    if broadcast:
-        bench_grams = F.broadcast(bench_grams)
+    bench_grams = F.broadcast(
+        _grams(bench, text_col, id_col, n, "bench_id").select("gram")
+    )
     flagged = (
         _grams(train, text_col, id_col, n, id_col)
         .join(bench_grams, "gram", "left_semi")

@@ -28,19 +28,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from spotify_app_etl_spark.operators.checkpoint import local_checkpoint_ser
-
-# Scoped persist moved to operators.persist in round 11 (it is engine
-# infrastructure used by plans, rank, similarity, and the SQL
-# front-end — not a dedup detail). Re-exported here so round-10-era
-# imports keep working; new code should import operators.persist.
-from spotify_app_etl_spark.operators.persist import (  # noqa: F401
-    cache_scope,
-    release_cached,
-    scoped_persist,
-)
-
-_scoped_persist = scoped_persist
-
+from spotify_app_etl_spark.operators.persist import scoped_persist
 
 # moved to operators.conf in round 11 (graph.py needs it too); the
 # private name stays bound for dedup-internal call sites
@@ -130,14 +118,6 @@ def _check_band_params(num_hashes: int, bands: int) -> None:
         )
 
 
-def _binary_band_of(num_hashes: int, bands: int):
-    """Band b of a packed binary signature (8 bytes per hash slot)."""
-    rows_per_band = num_hashes // bands
-    return lambda b: F.substring(
-        F.col("__sig"), b * (rows_per_band * 8) + 1, F.lit(rows_per_band * 8)
-    )
-
-
 def _binary_slot_eq(num_hashes: int):
     """Per-slot equality array between two packed binary signatures."""
     return lambda x, y: F.transform(
@@ -148,15 +128,14 @@ def _binary_slot_eq(num_hashes: int):
 
 
 def _banded(
-    sig: DataFrame, bands: int, band_of, keep_sig: bool = False
+    sig: DataFrame, num_hashes: int, bands: int, keep_sig: bool = False
 ) -> DataFrame:
-    """(__id[, __sig], band, bh) — one row per (doc, band), bh = seeded
-    hash of the band's signature content. THE one band-explode
-    definition, parameterized only by how a band is sliced out of the
-    signature (``band_of``: band index Column → content Column) — both
-    signature encodings (packed binary, array<long>) and both the
-    batch and persisted-index paths go through here, so the layout
-    cannot drift between them."""
+    """(__id[, __sig], band, bh) — one row per (doc, band) of the packed
+    binary signature (8 bytes per hash slot), bh = seeded hash of the
+    band's bytes. THE one band-explode definition: the batch and
+    persisted-index paths both go through here, so the layout cannot
+    drift between them."""
+    width = num_hashes // bands * 8
     extra = ["__sig"] if keep_sig else []
     return sig.select(
         "__id",
@@ -165,18 +144,14 @@ def _banded(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
                 lambda b: F.struct(
-                    b.alias("band"), F.xxhash64(band_of(b), b).alias("bh")
+                    b.alias("band"),
+                    F.xxhash64(
+                        F.substring(F.col("__sig"), b * width + 1, F.lit(width)), b
+                    ).alias("bh"),
                 ),
             )
         ).alias("bb"),
     ).select("__id", *extra, "bb.band", "bb.bh")
-
-
-def _banded_binary(
-    sig: DataFrame, num_hashes: int, bands: int, keep_sig: bool = False
-) -> DataFrame:
-    """:func:`_banded` over a packed-binary signature column."""
-    return _banded(sig, bands, _binary_band_of(num_hashes, bands), keep_sig)
 
 
 # ---------------------------------------------------------------------------
@@ -272,36 +247,6 @@ def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(
-    text: str | Column,
-    num_hashes: int = 64,
-    shingle_k: int = 9,
-    *,
-    assume_normalized: bool = False,
-) -> Column:
-    """MinHash signature as array<long>, computed fully JVM-side.
-
-    ``sig[j] = min over shingles s of xxhash64(h(s), j)`` — the seed-j
-    family of hash functions comes from xxhash64's second argument.
-    No shuffle, no UDF.
-    """
-    # Hash each shingle string ONCE (the shingle array + string hashing
-    # dominate); derive the j-th hash from the 64-bit shingle hash.
-    # Structured as a single fold carrying num_hashes running minima —
-    # an outer transform-per-j would re-evaluate the whole shingle
-    # pipeline num_hashes times (measured ~60x slowdown).
-    hs = F.transform(
-        char_shingles(text, k=shingle_k, assume_normalized=assume_normalized),
-        lambda s: F.xxhash64(s),
-    )
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.aggregate(
-        hs,
-        F.array_repeat(F.lit(9223372036854775807).cast("long"), num_hashes),
-        lambda acc, h: F.zip_with(acc, idx, lambda m, j: F.least(m, F.xxhash64(h, j))),
-    )
-
-
 def _minhash_text_arrow_udf(num_hashes: int, shingle_k: int = 9):
     """End-to-end Arrow signature kernel: normalized text in, signature
     out. Byte-level k-shingles come from a numpy sliding window over the
@@ -309,8 +254,7 @@ def _minhash_text_arrow_udf(num_hashes: int, shingle_k: int = 9):
     xxhash64, and the universal-hash min is one (windows x num_hashes)
     matrix op. No JVM higher-order functions, no per-shingle string
     allocation, no array_distinct (duplicate shingles cannot change a
-    min). Different hash family than :func:`minhash_signature` —
-    equally valid; recall is asserted against exact Jaccard in tests.
+    min); recall is asserted against exact Jaccard in tests.
 
     Returns the signature PACKED AS BINARY (big-endian int64 x
     num_hashes): the columnar cache encodes a flat byte column ~4x
@@ -352,8 +296,6 @@ def minhash_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    impl: str = "arrow",
-    parallelism: int | None = None,
     shingle_k: int = 9,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -378,61 +320,33 @@ def minhash_candidates(
     candidate semantics for the oracle-checked queries.
     """
     _check_band_params(num_hashes, bands)
-    rows_per_band = num_hashes // bands
-    # __norm is projected first so downstream shingle logic reads a
-    # plain attribute instead of re-running the normalization regexp
-    # per shingle (measured 7x on the expression path).
+    # __norm is projected first so the signature kernel reads a plain
+    # attribute instead of re-running the normalization regexp.
     base = df.select(F.col(id_col).alias("__id"), normalized(text_col).alias("__norm"))
     # Fan the signature kernel across all cores: a small corpus arrives
     # as one parquet file -> one task, serializing the UDF (measured 3x
     # end-to-end at sf0.1). The shuffled payload is just (id, norm). On
     # a real cluster the scan already has >= cores partitions and this
     # is skipped.
-    want = parallelism or df.sparkSession.sparkContext.defaultParallelism
-    base = _fan_out(base, want)
-    if impl == "arrow":
-        # Persist: the band explode and the two verification joins each
-        # consume the signatures; without the cache the Arrow kernel
-        # re-runs per consumer (3x). The cached table is tiny —
-        # num_hashes longs per doc. At cluster scale the signature
-        # table IS the LSH index — write it to parquet once and reuse
-        # across runs.
-        sig = _scoped_persist(
-            base.select(
-                "__id",
-                _minhash_text_arrow_udf(num_hashes, shingle_k)("__norm").alias("__sig"),
-            )
+    base = _fan_out(base, df.sparkSession.sparkContext.defaultParallelism)
+    # Persist: the band explode and the two verification joins each
+    # consume the signatures; without the cache the Arrow kernel re-runs
+    # per consumer (3x). The cached table is tiny — num_hashes longs per
+    # doc. At cluster scale the signature table IS the LSH index — write
+    # it to parquet once and reuse across runs.
+    sig = scoped_persist(
+        base.select(
+            "__id",
+            _minhash_text_arrow_udf(num_hashes, shingle_k)("__norm").alias("__sig"),
         )
-        # Materialize now: the three consumers otherwise race to build
-        # the cache within one job (each stage recomputes the kernel on
-        # whatever partitions it reaches first — measured 2x the whole
-        # pipeline at sf0.1).
-        sig.count()
-    else:  # pure column-expression path (no Arrow dependency)
-        # Persist: Catalyst project-collapsing would otherwise inline
-        # the full 64-hash expression into every consumer (measured
-        # 100x slowdown).
-        sig = _scoped_persist(
-            base.select(
-                "__id",
-                minhash_signature(
-                    "__norm",
-                    num_hashes=num_hashes,
-                    shingle_k=shingle_k,
-                    assume_normalized=True,
-                ).alias("__sig"),
-            )
-        )
-    if impl == "arrow":  # binary signature: shared banding helpers
-        band_of = _binary_band_of(num_hashes, bands)
-        slot_eq = _binary_slot_eq(num_hashes)
-        banded = _banded_binary(sig, num_hashes, bands)
-    else:  # array<long> signature — same shared band explode
-        band_of = lambda b: F.slice(  # noqa: E731
-            F.col("__sig"), b * rows_per_band + 1, rows_per_band
-        )
-        slot_eq = lambda x, y: F.zip_with(x, y, lambda p, q: p == q)  # noqa: E731
-        banded = _banded(sig, bands, band_of)
+    )
+    # Materialize now: the three consumers otherwise race to build the
+    # cache within one job (each stage recomputes the kernel on whatever
+    # partitions it reaches first — measured 2x the whole pipeline at
+    # sf0.1).
+    sig.count()
+    slot_eq = _binary_slot_eq(num_hashes)
+    banded = _banded(sig, num_hashes, bands)
     banded = _cap_buckets(banded, ["band", "bh"], max_bucket_size)
     pairs = (
         banded.alias("a")
@@ -578,11 +492,11 @@ def simhash_candidates(
             "__id",
             F.transform(F.split("__norm", " "), lambda tk: F.xxhash64(tk)).alias("__hs"),
         )
-        sig = _scoped_persist(
+        sig = scoped_persist(
             hs.select("__id", _simhash_arrow_udf()("__hs").alias("__sim"))
         )
     else:
-        sig = _scoped_persist(
+        sig = scoped_persist(
             df.select(
                 F.col(id_col).alias("__id"), simhash_signature(text_col).alias("__sim")
             )
@@ -688,7 +602,7 @@ def embedding_cosine_pairs(
         # Persisted: sizing needs a count, and an unpersisted `side`
         # would re-scan + re-cast the full vector table once for the
         # count and again for the packed aggregate below.
-        side = _scoped_persist(side)
+        side = scoped_persist(side)
         n = side.count()
         par = df.sparkSession.sparkContext.defaultParallelism
         # smallest b with b(b+1)/2 >= par; isqrt FLOORS, so bump once
@@ -1140,7 +1054,7 @@ def ngram_jaccard_pairs(
     # persist: consumed by the size agg, the frequency agg, the prefix
     # ranking and both verification joins; token array projected first
     # (per-element reference, see token_ngrams)
-    grams = _scoped_persist(
+    grams = scoped_persist(
         _fan_out(
             df.select(
                 F.col(id_col).alias("__id"),
@@ -1213,7 +1127,7 @@ def ngram_jaccard_pairs(
     gid_type = "int" if vocab_n <= 2**31 - 1 else "long"
     vocab = ranked.select("gram", F.col("__gid").cast(gid_type).alias("__gid"))
     # one gram-table-wide string join, then ints everywhere
-    gi = _scoped_persist(grams.join(vocab, "gram").select("__id", "__gid"))
+    gi = scoped_persist(grams.join(vocab, "gram").select("__id", "__gid"))
     # per-doc size via the same window partitioning as the rank — no
     # separate sizes aggregation/join
     by_doc = _W.partitionBy("__id")
@@ -1359,7 +1273,7 @@ def ngram_jaccard_on(
         .unionByName(cand.select(F.col("id_b").alias("__id")))
         .distinct()
     )
-    grams = _scoped_persist(
+    grams = scoped_persist(
         df.select(
             F.col(id_col).alias("__id"),
             F.split(normalized(text_col), " ").alias("__toks"),
@@ -1495,7 +1409,8 @@ def minhash_dedup_incremental_with_sigs(
     after its sink write instead of re-running the shingling/MinHash
     Arrow kernel over the surviving text — the dominant per-batch cost,
     paid once instead of twice. ``kept_sig`` rides on the scoped
-    signature persist; append it before :func:`release_cached`.
+    signature persist; append it before
+    :func:`operators.persist.release_cached`.
     """
     return _minhash_dedup_incremental_core(
         new_docs, index_path, text_col, id_col, num_hashes, bands,
@@ -1535,14 +1450,14 @@ def _minhash_dedup_incremental_core(
     def banded(sig: DataFrame) -> DataFrame:
         # the SHARED banding helper: index interop requires the
         # incremental path to band exactly like minhash_candidates
-        return _banded_binary(sig, num_hashes, bands, keep_sig=True)
+        return _banded(sig, num_hashes, bands, keep_sig=True)
 
     base = new_docs.select(
         F.col(id_col).alias("__id"), normalized(text_col).alias("__norm")
     )
     want = spark.sparkContext.defaultParallelism
     base = _fan_out(base, want)
-    new_sig = _scoped_persist(
+    new_sig = scoped_persist(
         base.select(
             "__id",
             _minhash_text_arrow_udf(num_hashes, shingle_k)("__norm").alias("__sig"),
@@ -1728,7 +1643,7 @@ def semantic_dedup_pairs(
     # as `centers` above. 256 is the exact kernel's grid cap (past
     # ~2.5M rows per cell the matmul flops are the problem, not the
     # grid; such a cell means n_cells is set far too low).
-    assigned = _scoped_persist(assigned)
+    assigned = scoped_persist(assigned)
     cell_counts = {
         r["__cell"]: r["__n"]
         for r in assigned.groupBy("__cell").agg(F.count(F.lit(1)).alias("__n")).collect()

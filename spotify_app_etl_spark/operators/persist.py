@@ -18,10 +18,9 @@ share the process with other live jobs wrap their work in
 :func:`cache_scope`, which releases exactly the caches registered on
 the current thread inside the block.
 
-This was ``operators.dedup``'s private machinery through round 10;
-it moved here because plans, rank, similarity, and the SQL front-end
-all import it — engine infrastructure, not a dedup detail. The dedup
-module re-exports the old names for compatibility.
+This module is the only import path for these names: plans, rank,
+similarity, the SQL front-end, streaming, scripts and tests all import
+them from here.
 """
 
 from __future__ import annotations

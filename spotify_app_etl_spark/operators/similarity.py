@@ -13,7 +13,7 @@ Scale (100 TB): brute force is O(|queries| × |corpus|); it is only the
 baseline and the within-bucket kernel. The ANN variant buckets corpus
 and queries by 16 sign-bits of deterministic random projections: the
 corpus shuffles once on bucket id, each query joins only its bucket
-(plus optional 1-bit multiprobe neighbors for recall).
+(plus its 1-bit multiprobe neighbors for recall).
 """
 
 from __future__ import annotations
@@ -34,9 +34,9 @@ def _valid_vec(v: Column) -> Column:
     array is non-null) yet folds every projection/distance to NULL or
     NaN: unguarded, such rows hash to bucket 0 of every LSH table
     (phantom neighbors for any bucket-0 probe) and crash or poison
-    KMeans. An EMPTY array has no direction either — it zero-folds to
-    bucket 0 on the expression path and np.vstack's dimension mismatch
-    kills the numpy kernels."""
+    KMeans. An EMPTY array has no direction either — it projects to
+    bucket 0 and np.vstack's dimension mismatch kills the numpy
+    kernels."""
     return (
         v.isNotNull()
         & (F.size(v) > 0)
@@ -131,51 +131,6 @@ def cosine_topk_bruteforce(
 # ---------------------------------------------------------------------------
 # LSH-bucketed ANN (random hyperplane / sign LSH).
 # ---------------------------------------------------------------------------
-
-
-def hyperplane_bucket(
-    vec: Column, planes: int = 16, table: int = 0, *, assume_double: bool = False
-) -> Column:
-    """Deterministic sign-LSH bucket id (int) from ``planes`` pseudo-
-    random hyperplanes (one independent family per ``table``).
-
-    Plane p's weight for dimension d is ±1 derived from
-    xxhash64(table*1024+p, d) parity — reproducible across runs and
-    executors with no side data to broadcast.
-    bucket bit p = sign(Σ_d w_pd · v_d).
-
-    PERF: ``vec`` is referenced once per plane — pass a pre-projected
-    (already-cast) column so each reference is an attribute read, not
-    a re-evaluated cast/expression.
-    """
-    v = vec if assume_double else _as_double(vec)
-    def bit(p: int) -> Column:
-        seed = table * 1024 + p
-        proj = F.aggregate(
-            F.zip_with(
-                v,
-                F.sequence(F.lit(0), F.size(v) - 1),
-                lambda x, d: F.when(
-                    F.xxhash64(F.lit(seed), d).bitwiseAND(F.lit(1)) == 1, x
-                ).otherwise(-x),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(proj > 0, F.shiftleft(F.lit(1), p)).otherwise(F.lit(0))
-    out = F.lit(0)
-    for p in range(planes):
-        out = out.bitwiseOR(bit(p))
-    # NULL / NULL-element / NaN embedding → NULL bucket, NOT bucket 0:
-    # a NULL projection falls through every when().otherwise(0) (and a
-    # NaN one fails every proj > 0), which would silently hash the
-    # vector into bucket 0 of every table — phantom NULL-cos_sim
-    # neighbors for any query probing bucket 0. The _valid_vec guard
-    # covers element-NULLs and NaNs, which pass a bare isNotNull()
-    # because the array itself is non-null; such rows drop out of the
-    # null-unsafe bucket equi-join instead, matching the Arrow
-    # kernel's NULL → NULL-bucket-array behavior.
-    return F.when(_valid_vec(v), out)
 
 
 def _cell_rank(centers: list[list[float]], v: Column, k: int | None = None) -> Column:
@@ -381,11 +336,7 @@ def _score_topk(
 
 def _hyperplane_buckets_arrow(tables: int, planes: int, seed: int = 7):
     """Arrow kernel: all ``tables`` bucket ids in one numpy matmul per
-    batch — sign bits of V @ W.T with a seeded ±1 plane matrix. The
-    column-expression :func:`hyperplane_bucket` evaluates
-    tables x planes interpreted folds per row; this replaces them with
-    one vectorized projection (same recall properties, different —
-    equally valid — hash family)."""
+    batch — sign bits of V @ W.T with a seeded ±1 plane matrix."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -403,17 +354,17 @@ def _hyperplane_buckets_arrow(tables: int, planes: int, seed: int = 7):
         w = None
         for v in vecs:
             if v is None:
-                # NULL embedding → NULL bucket array, matching the
-                # column-expression path's null tolerance; the
-                # np.asarray(None) TypeError would otherwise kill the
-                # whole task from deep inside a Python worker.
+                # NULL embedding → NULL bucket array (out of the
+                # bucket equi-join); the np.asarray(None) TypeError
+                # would otherwise kill the whole task from deep inside
+                # a Python worker.
                 out.append(None)
                 continue
             x = np.asarray(v, dtype=np.float64)
             if np.isnan(x).any():
                 # element-NULL (→ nan here) or genuine NaN: no
-                # direction to hash — NULL buckets, same as the
-                # expression path's _valid_vec guard, never bucket 0
+                # direction to hash — NULL buckets, the rows _valid_vec
+                # rejects, never bucket 0
                 out.append(None)
                 continue
             if w is None or w.shape[1] != x.size:
@@ -434,45 +385,28 @@ def cosine_topk_lsh(
     query_id: str = "query_id",
     corpus_id: str = "corpus_id",
     vec: str = "embedding",
-    multiprobe: bool = True,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: compare only within matching LSH buckets.
 
     ``tables`` independent hash tables multiply recall (candidate set =
     union over tables) at the cost of ``tables``× corpus index rows —
     the standard LSH tradeoff; the corpus-side explode is the index
-    build, one shuffle on (table, bucket). With ``multiprobe`` each
-    query additionally probes the ``planes`` buckets at Hamming
-    distance 1 per table.
+    build, one shuffle on (table, bucket). Each query additionally
+    probes the ``planes`` buckets at Hamming distance 1 per table
+    (:func:`_probe_structs`, the same probe set as
+    :func:`signlsh_index_search`).
 
     De-dup before scoring: a pair found in several tables is scored
     once (distinct on (query, corpus)), keeping cost ∝ unique
     candidates.
     """
-    if impl == "arrow":
-        bks = _hyperplane_buckets_arrow(tables, planes)
-        c0 = corpus.select(
-            F.col(corpus_id), _as_double(F.col(vec)).alias("__cv")
-        ).withColumn("__bks", bks(F.col("__cv")))
-        q0 = queries.select(
-            F.col(query_id), _as_double(F.col(vec)).alias("__qv")
-        ).withColumn("__bks", bks(F.col("__qv")))
-
-        def c_bucket(t: int):
-            return F.element_at(F.col("__bks"), t + 1)
-
-        q_bucket = c_bucket
-    else:
-        c0 = corpus.select(F.col(corpus_id), _as_double(F.col(vec)).alias("__cv"))
-        q0 = queries.select(F.col(query_id), _as_double(F.col(vec)).alias("__qv"))
-
-        def c_bucket(t: int):
-            return hyperplane_bucket(F.col("__cv"), planes, table=t, assume_double=True)
-
-        def q_bucket(t: int):
-            return hyperplane_bucket(F.col("__qv"), planes, table=t, assume_double=True)
-
+    bks = _hyperplane_buckets_arrow(tables, planes)
+    c0 = corpus.select(
+        F.col(corpus_id), _as_double(F.col(vec)).alias("__cv")
+    ).withColumn("__bks", bks(F.col("__cv")))
+    q0 = queries.select(
+        F.col(query_id), _as_double(F.col(vec)).alias("__qv")
+    ).withColumn("__bks", bks(F.col("__qv")))
     c = c0.select(
         corpus_id,
         "__cv",
@@ -481,7 +415,7 @@ def cosine_topk_lsh(
                 *[
                     F.struct(
                         F.lit(t).alias("tbl"),
-                        c_bucket(t).cast("int").alias("bkt"),
+                        F.element_at(F.col("__bks"), t + 1).cast("int").alias("bkt"),
                     )
                     for t in range(tables)
                 ]
@@ -491,22 +425,7 @@ def cosine_topk_lsh(
     q = q0.select(
         query_id,
         "__qv",
-        *[q_bucket(tb).cast("int").alias(f"__b{tb}") for tb in range(tables)],
-    )
-    probe_structs = []
-    for tb in range(tables):
-        b0 = F.col(f"__b{tb}")
-        probe_structs.append(F.struct(F.lit(tb).alias("tbl"), b0.alias("bkt")))
-        if multiprobe:
-            for p in range(planes):
-                probe_structs.append(
-                    F.struct(
-                        F.lit(tb).alias("tbl"),
-                        b0.bitwiseXOR(F.lit(1 << p)).alias("bkt"),
-                    )
-                )
-    q = q.select(
-        query_id, "__qv", F.explode(F.array_distinct(F.array(*probe_structs))).alias("tb")
+        F.explode(F.array_distinct(F.array(*_probe_structs(tables, planes)))).alias("tb"),
     ).select(query_id, "__qv", "tb.tbl", "tb.bkt")
     # __cv rides the bucket join (c carries it), so the pair dedup
     # keeps it and scoring needs NO second corpus scan/shuffle
@@ -534,20 +453,16 @@ def cosine_range_search(
     query_id: str = "query_id",
     corpus_id: str = "corpus_id",
     vec: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """All (query, corpus) pairs with cosine ≥ threshold — range search,
     the retrieval mode where the neighbor COUNT is the unknown (top-k
     fixes count, range search fixes quality).
 
-    ``exclude_self`` drops pairs whose ids are EQUAL — the right default
-    for the self-join shape (corpus searched against itself, where
-    (x, x) at cosine 1.0 is noise), but pass ``False`` when queries and
-    corpus are distinct tables whose id namespaces merely overlap:
-    there, query 7 and document 7 are unrelated rows and silently
-    dropping their pair would be a wrong answer. The top-k kernels
-    never id-filter; this flag is the explicit, caller-owned version of
-    that choice.
+    Pairs whose ids are EQUAL are dropped — the self-join shape (corpus
+    searched against itself, where (x, x) at cosine 1.0 is noise).
+    Queries and corpus from distinct tables whose id namespaces overlap
+    must be given disjoint ids first: there, query 7 and document 7 are
+    unrelated rows. The top-k kernels never id-filter.
 
     Same exact kernel as :func:`cosine_topk_bruteforce` (broadcast
     query side, pre-hoisted norms, left-fold dot product → bit-exact
@@ -575,11 +490,10 @@ def cosine_range_search(
         )
         .filter(F.col("cos_sim") >= threshold)
     )
-    if exclude_self:
-        # null-safe inequality: a plain != evaluates to NULL when either
-        # id is NULL, silently dropping genuine above-threshold pairs —
-        # only true id-equal pairs may be excluded
-        out = out.filter(~F.col(query_id).eqNullSafe(F.col(corpus_id)))
+    # null-safe inequality: a plain != evaluates to NULL when either
+    # id is NULL, silently dropping genuine above-threshold pairs —
+    # only true id-equal pairs may be excluded
+    out = out.filter(~F.col(query_id).eqNullSafe(F.col(corpus_id)))
     return out.select(query_id, corpus_id, "cos_sim")
 
 
@@ -588,22 +502,21 @@ def cosine_range_search(
 # ---------------------------------------------------------------------------
 
 
-def _probe_structs(tables: int, planes: int, multiprobe: bool) -> list[Column]:
+def _probe_structs(tables: int, planes: int) -> list[Column]:
     """Probe (tbl, bkt) structs for a query row holding its bucket array
-    in ``__bks`` — the exact bucket per table plus, with multiprobe, the
-    ``planes`` Hamming-1 neighbors per table."""
+    in ``__bks`` — the exact bucket per table plus the ``planes``
+    Hamming-1 neighbors per table (1-bit multiprobe)."""
     out: list[Column] = []
     for tb in range(tables):
         b0 = F.element_at(F.col("__bks"), tb + 1).cast("int")
         out.append(F.struct(F.lit(tb).alias("tbl"), b0.alias("bkt")))
-        if multiprobe:
-            for p in range(planes):
-                out.append(
-                    F.struct(
-                        F.lit(tb).alias("tbl"),
-                        b0.bitwiseXOR(F.lit(1 << p)).alias("bkt"),
-                    )
+        for p in range(planes):
+            out.append(
+                F.struct(
+                    F.lit(tb).alias("tbl"),
+                    b0.bitwiseXOR(F.lit(1 << p)).alias("bkt"),
                 )
+            )
     return out
 
 
@@ -795,7 +708,6 @@ def signlsh_index_search(
     k: int = 5,
     query_id: str = "query_id",
     vec: str = "embedding",
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Top-k ANN against a persisted sign-LSH index.
 
@@ -830,7 +742,7 @@ def signlsh_index_search(
     probes = q0.select(
         query_id,
         F.explode(
-            F.array_distinct(F.array(*_probe_structs(tables, planes, multiprobe)))
+            F.array_distinct(F.array(*_probe_structs(tables, planes)))
         ).alias("tb"),
     ).select(query_id, "tb.tbl", "tb.bkt")
     candidates = (

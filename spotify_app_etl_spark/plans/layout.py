@@ -309,8 +309,8 @@ def ns_layout_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # must not delete each other's live copy mid-read.
     base = _layout_dir(spark, sf_dir, "compact_rt")
     shutil.rmtree(base, ignore_errors=True)
-    # ts is TIMESTAMP(NANOS) in the driver testdata — keep the scratch
-    # copy to plain columns so the round-trip needs no legacy conf.
+    # The round-trip tests file layout only: the partition column and
+    # one value column are all the scratch copy needs.
     src = t(spark, sf_dir, "events").select("event_type", "value")
     src.repartition(8).write.partitionBy("event_type").mode("overwrite").parquet(
         base

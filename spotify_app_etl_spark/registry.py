@@ -12,11 +12,14 @@ deterministic.
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from spotify_app_etl_spark.session import configure_session
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -155,8 +158,21 @@ def load_all() -> dict[str, Query]:
     return ordered
 
 
+def _configured(fn: QueryFn) -> QueryFn:
+    """``fn`` preceded by :func:`configure_session` on the session it
+    is handed — the boundary where an outside session comes in."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(configure_session(spark), sf_dir)
+
+    return run
+
+
 def queries() -> dict[str, QueryFn]:
-    return {name: q.fn for name, q in load_all().items()}
+    """Every registered query, each configuring the session it is given
+    before it runs (an external driver passes its own session)."""
+    return {name: _configured(q.fn) for name, q in load_all().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -15,8 +15,9 @@ from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # A. Driver testdata tables (/root/testdata/sf*/; FIXTURES.md §B).
-#    events.ts is stored as parquet TIMESTAMP(NANOS) → scanned as LongType
-#    (see session.RUNTIME_CONFS) and converted in io.load_table.
+#    events.ts is stored as parquet TIMESTAMP(MICROS) → TIMESTAMP_NTZ; an
+#    events file written through pandas stores TIMESTAMP(NANOS), scanned as
+#    LongType (see session.RUNTIME_CONFS) and converted in io.load_table.
 # ---------------------------------------------------------------------------
 
 REGION = T.StructType(

@@ -3,13 +3,16 @@
 Two layers:
 
 - :func:`get_spark` builds a local session with scale-appropriate
-  defaults (AQE on, shuffle partitions ~ cores, Arrow on). Used by
-  tests and perfbench.
-- :func:`configure_session` applies the subset of confs that are
-  runtime-settable to ANY session — including one handed to us by an
-  external driver (``__spark_entry__.entry(spark)``). Every query
-  entry point calls this so behavior does not depend on who built the
-  session.
+  defaults (AQE on, shuffle partitions ~ cores, Arrow on) and
+  configures it. Used by tests, scripts and perfbench.
+- :func:`configure_session` applies the runtime-settable confs to ANY
+  session — including one handed to us by an external driver. It runs
+  once at the boundary where a session comes in: :func:`get_spark`,
+  ``__spark_entry__.entry`` and each callable that
+  ``registry.queries()`` returns. Engine code below that boundary
+  (readers, ETL steps, streaming sources) assumes a configured session
+  and never re-applies the confs, so a caller's temporary override
+  (``checkpoint.adaptive_off``) holds for the calls it wraps.
 
 Scale note: on a real multi-executor cluster the same confs apply;
 ``spark.sql.shuffle.partitions`` should instead be sized to
@@ -26,8 +29,6 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 #: Confs that are safe to set on a running session (SQLConf, not core).
 RUNTIME_CONFS: dict[str, str] = {
     # Deterministic timestamps for oracle comparison (duckdb is UTC-naive).
@@ -36,31 +37,12 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Elastic shuffle parallelism: shuffles START at 32x the core count
-    # and AQE coalesces down to the advisory size (parallelismFirst
-    # keeps small runs at ~defaultParallelism, so sf0.01/sf0.1 plans
-    # are unchanged). Without this the fixed `shuffle.partitions ~
-    # cores` cap means every shuffle partition grows linearly with the
-    # data — the 128x scale probe measured exactly that failure
-    # (HashAggregate spill-then-OOM, cache-eviction thrash in the
-    # iterative CC), and the r09 512x probe re-measured it at the 8x
-    # ceiling set then (q05's six-way join: reduce tasks fetching
-    # ~1.2M-row partitions OOM'd the heap; at 32x the same join
-    # completes). AQE can only merge partitions, never split a
-    # non-skew-join stage, so the ceiling must be set here — and with
-    # sort-based shuffle the map side writes ONE file per task
-    # regardless of reducer count, so a higher ceiling costs small
-    # scales nothing once AQE coalesces them back to
-    # ~defaultParallelism.
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(
-        DEFAULT_CPUS * 32
-    ),
-    # ...but the high ceiling is only free when AQE coalescing actually
-    # APPLIES. By default (false) Spark pins a persisted plan's output
-    # partitioning, which disables coalescing for every exchange inside
-    # a cached subtree — so each _scoped_persist'd signature/gram table
-    # (operators/dedup.py) materialized, and was re-scanned, at the FULL
-    # initial width. Measured r10, ns_dedup_minhash_verified rider-free
+    # The high shuffle ceiling (configure_session) is only free when
+    # AQE coalescing actually APPLIES. By default (false) Spark pins a
+    # persisted plan's output partitioning, which disables coalescing
+    # for every exchange inside a cached subtree — so each
+    # scoped_persist'd signature/gram table (operators/dedup.py)
+    # materialized, and was re-scanned, at the FULL initial width. Measured r10, ns_dedup_minhash_verified rider-free
     # arm at sf0.1: eight 1024-task near-zero-runtime stages, 10.1 s →
     # 2.4 s with this flag (the "host drift" the r09 verdict carried as
     # a watch item was in fact this: the r09 ceiling raise 256→1024
@@ -80,9 +62,10 @@ RUNTIME_CONFS: dict[str, str] = {
     # CTE should become an explicit iterative loop (operators/graph.py
     # style) anyway.
     "spark.sql.cteRecursionRowLimit": str(2**31 - 1),
-    # Testdata events.parquet stores TIMESTAMP(NANOS); Spark has no
-    # nanosecond timestamp type, so scan them as epoch-nanos longs and
-    # convert explicitly (io.load_table).
+    # The driver testdata stores events.ts as TIMESTAMP(MICROS), but an
+    # events.parquet written through pandas stores TIMESTAMP(NANOS),
+    # which has no Spark type; scan it as epoch-nanos longs and convert
+    # explicitly (io.load_table).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow for any pandas_udf / toPandas path.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
@@ -141,14 +124,36 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (idempotent)."""
-    for key, value in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # A conf may be non-settable in some deployment; queries must
-            # still run (events loading re-checks what it got).
-            pass
+    """Apply runtime-settable confs to an existing session (idempotent).
+
+    Raises when the session refuses a conf: every query's results
+    depend on them (UTC timestamps above all), so a session that cannot
+    take them must fail here, not return different values later.
+    """
+    confs = {
+        **RUNTIME_CONFS,
+        # Elastic shuffle parallelism: shuffles START at 32x the cores
+        # of the live context and AQE coalesces down to the advisory
+        # size (parallelismFirst keeps small runs at
+        # ~defaultParallelism, so sf0.01/sf0.1 plans are unchanged).
+        # Without this the fixed `shuffle.partitions ~ cores` cap means
+        # every shuffle partition grows linearly with the data — the
+        # 128x scale probe measured exactly that failure (HashAggregate
+        # spill-then-OOM, cache-eviction thrash in the iterative CC),
+        # and the 512x probe re-measured it at an 8x ceiling (q05's
+        # six-way join: reduce tasks fetching ~1.2M-row partitions
+        # OOM'd the heap; at 32x the same join completes). AQE can only
+        # merge partitions, never split a non-skew-join stage, so the
+        # ceiling must be set here — and with sort-based shuffle the map
+        # side writes ONE file per task regardless of reducer count, so
+        # a higher ceiling costs small scales nothing once AQE coalesces
+        # them back to ~defaultParallelism.
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(
+            32 * spark.sparkContext.defaultParallelism
+        ),
+    }
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     _ship_package(spark)
     return spark
 
@@ -158,8 +163,11 @@ def get_spark(
     cpus: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local SparkSession with engine defaults."""
-    cpus = cpus or DEFAULT_CPUS
+    """Build (or reuse) a local SparkSession with engine defaults.
+
+    ``cpus`` defaults to the cores this process may run on.
+    """
+    cpus = cpus or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -179,8 +187,6 @@ def get_spark(
         # Build-time only (core memory manager conf, not a SQLConf).
         .config("spark.memory.storageFraction", "0.3")
     )
-    for key, value in RUNTIME_CONFS.items():
-        builder = builder.config(key, value)
     for key, value in (extra_confs or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()

@@ -50,17 +50,13 @@ def read_event_stream(
     The driver testdata ``events`` table stores ``ts`` as parquet
     TIMESTAMP(MICROS, isAdjustedToUTC=false) → TIMESTAMP_NTZ. Spark's
     event-time watermark requires TIMESTAMP, so the stream casts NTZ →
-    TIMESTAMP at the source; the session timezone is pinned to UTC
-    HERE (same configure_session call io.load_table makes), not
-    assumed, so the wall-clock values map 1:1 and stream rows stay
-    identical to the batch rows even when the caller built a plain
-    session in a non-UTC zone. The schema is the one typed definition
-    in ``schemas.EVENTS`` — re-declaring it here is exactly the drift
-    that module exists to prevent.
+    TIMESTAMP at the source. That cast is 1:1 on wall-clock values —
+    stream rows identical to the batch rows — only in a UTC session,
+    which ``configure_session`` (run by whoever hands the session in:
+    ``get_spark``, ``registry.queries()``) guarantees. The schema is
+    the one typed definition in ``schemas.EVENTS`` — re-declaring it
+    here is exactly the drift that module exists to prevent.
     """
-    from spotify_app_etl_spark.session import configure_session
-
-    configure_session(spark)
     stream = (
         spark.readStream.schema(schemas.EVENTS)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -415,6 +411,7 @@ def streaming_dedup_ingest(
     (extra candidate checks, never wrong results).
     """
     from spotify_app_etl_spark.operators import dedup as DD
+    from spotify_app_etl_spark.operators.persist import cache_scope
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):
@@ -433,7 +430,7 @@ def streaming_dedup_ingest(
         # even on a failed sink/index write, where each foreachBatch
         # retry would otherwise persist another signature table
         # (unbounded cache growth across a flaky outage).
-        with DD.cache_scope():
+        with cache_scope():
             kept, kept_sig = DD.minhash_dedup_incremental_with_sigs(
                 batch_df, index_path, text_col, id_col, threshold=threshold
             )

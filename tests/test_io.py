@@ -134,6 +134,23 @@ def test_loaders_match_declared_schemas(spark):
         assert actual == declared, f"{name}: {actual} != {declared}"
 
 
+def test_testdata_footers_match_declared_schemas(spark):
+    """Every testdata table at every scale stores exactly the field names
+    and Spark types ``schemas.py`` declares, read straight from the
+    parquet footer (no loader conversion): drift fails here instead of
+    being silently cast downstream."""
+    from pathlib import Path
+
+    sf_dirs = sorted(Path(SF).parent.glob("sf*"))
+    assert sf_dirs
+    for sf_dir in sf_dirs:
+        for name, schema in schemas.TESTDATA.items():
+            stored = spark.read.parquet(str(sf_dir / f"{name}.parquet")).schema
+            got = [(f.name, f.dataType) for f in stored.fields]
+            want = [(f.name, f.dataType) for f in schema.fields]
+            assert got == want, f"{sf_dir.name}/{name}: {got} != {want}"
+
+
 def test_compact_parquet_reduces_file_count(spark, tmp_path):
     """200 tiny files -> sized file count; rows and values survive."""
     src = str(tmp_path / "small_files")

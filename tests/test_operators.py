@@ -11,6 +11,11 @@ from spotify_app_etl_spark.functions import text as TX
 from spotify_app_etl_spark.io import load_table
 from spotify_app_etl_spark.operators import dedup as DD
 from spotify_app_etl_spark.operators import similarity as SIM
+from spotify_app_etl_spark.operators.persist import (
+    cache_scope,
+    release_cached,
+    scoped_persist,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -336,27 +341,35 @@ def test_token_and_quality(spark):
     assert row.fp == row2.fp
 
 
-def test_fingerprint_arrow_matches_expression(spark):
-    # bit-identity between the Arrow Horner kernel and the column
-    # expression, across empty / short / long / repeated-char docs
+def test_fingerprint_matches_python_fold(spark):
+    # the column expression equals the plain Horner fold
+    # acc = (acc*31 + code) % m across empty / short / long /
+    # repeated-char docs; NULL text -> NULL (0 would collide every
+    # NULL doc with every empty doc)
+    mod = 2147483647
+
+    def fold(text):
+        acc = 0
+        for ch in text or "\0":  # split('', '') folds one code-0 char
+            acc = (acc * 31 + ord(ch)) % mod
+        return acc
+
     texts = [
         (1, ""),
         (2, "a"),
         (3, "the quick brown fox jumps over the lazy dog"),
         (4, "z" * 5000),
         (5, ("lorem ipsum dolor sit amet " * 200).strip()),
-        (6, None),  # NULL text -> NULL on BOTH paths (0 would collide
-        # every NULL doc with every empty doc)
+        (6, None),
     ]
     df = spark.createDataFrame(texts, "doc_id long, text string")
-    out = df.select(
-        "doc_id",
-        TX.fingerprint("text", assume_normalized=True).alias("expr_fp"),
-        TX.fingerprint_arrow()(F.col("text")).alias("arrow_fp"),
-    ).collect()
-    for r in out:
-        assert r.expr_fp == r.arrow_fp, r.doc_id
-    assert {r.doc_id: r.arrow_fp for r in out}[6] is None
+    got = {
+        r.doc_id: r.fp
+        for r in df.select(
+            "doc_id", TX.fingerprint("text", assume_normalized=True).alias("fp")
+        ).collect()
+    }
+    assert got == {i: (None if t is None else fold(t)) for i, t in texts}
 
 
 def test_minhash_incremental_dedup_against_index(spark, tmp_path):
@@ -394,7 +407,7 @@ def test_minhash_incremental_dedup_against_index(spark, tmp_path):
         batch2, idx, "text", "doc_id", threshold=0.5
     )
     kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
-    DD.release_cached()
+    release_cached()
 
     # near-copies of indexed docs must be dropped (recall >= 90%)
     dropped_copies = sum(1 for i in range(30) if (i + 10_000) not in kept_ids)
@@ -481,7 +494,7 @@ def test_jaccard_verify_composes_with_simhash_candidates(spark):
         ).collect()
     }
     cand_set = {(r.id_a, r.id_b) for r in cand.select("id_a", "id_b").collect()}
-    DD.release_cached()
+    release_cached()
     expected = {p: j for p, j in exact.items() if p in cand_set}
     assert got == expected and len(got) > 0
 
@@ -507,7 +520,7 @@ def test_minhash_incremental_kept_immune_to_index_refresh(spark, tmp_path):
     # simulate a re-listed parquet file index after the append
     spark.catalog.refreshByPath(idx)
     kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
-    DD.release_cached()
+    release_cached()
     # most of the batch is novel vs the index; self-matching would
     # leave ~0 survivors
     assert len(kept_ids) >= 40, len(kept_ids)
@@ -758,12 +771,12 @@ def test_minhash_bucket_cap_drops_degenerate_buckets(spark):
 
     uncapped = DD.minhash_candidates(corpus, "text", "doc_id", threshold=0.5)
     n_unc = uncapped.count()
-    DD.release_cached()
+    release_cached()
     capped = DD.minhash_candidates(
         corpus, "text", "doc_id", threshold=0.5, max_bucket_size=50
     )
     rows = capped.collect()
-    DD.release_cached()
+    release_cached()
 
     boiler_pairs = sum(1 for r in rows if r.id_a >= 900_000 and r.id_b >= 900_000)
     assert boiler_pairs == 0  # the degenerate family never enters the join
@@ -892,23 +905,21 @@ def test_cache_scope_releases_only_own_entries(spark):
     foreachBatch callback releases its batch) stay persisted."""
     import threading
 
-    from spotify_app_etl_spark.operators import dedup as DD
-
     outer = spark.range(10)
-    DD._scoped_persist(outer)
+    scoped_persist(outer)
     outer.count()
 
     concurrent: dict[str, object] = {}
 
     def other_thread_persist() -> None:
         df = spark.range(7)
-        DD._scoped_persist(df)
+        scoped_persist(df)
         df.count()
         concurrent["df"] = df
 
-    with DD.cache_scope():
+    with cache_scope():
         inner = spark.range(5)
-        DD._scoped_persist(inner)
+        scoped_persist(inner)
         inner.count()
         worker = threading.Thread(target=other_thread_persist)
         worker.start()
@@ -919,7 +930,7 @@ def test_cache_scope_releases_only_own_entries(spark):
     assert outer.storageLevel.useMemory  # outer job untouched
     assert concurrent["df"].storageLevel.useMemory  # other thread untouched
 
-    DD.release_cached()  # the global janitor still clears everything
+    release_cached()  # the global janitor still clears everything
     assert not outer.storageLevel.useMemory
     assert not concurrent["df"].storageLevel.useMemory
 
@@ -966,13 +977,10 @@ def test_fan_out_sees_through_bin_packing(spark, tmp_path):
 
 
 def test_lsh_null_embedding_dropped_by_both_impls(spark):
-    """A NULL corpus embedding must be DROPPED by both LSH bucket
-    implementations: the column-expression path used to hash it into
-    bucket 0 of every table (NULL projection → when().otherwise(0)),
-    surfacing phantom NULL-cos_sim neighbors, while the Arrow kernel
-    dropped it — the two impls of the same operator must agree."""
-    import pyspark.sql.functions as F
-
+    """A NULL corpus embedding must be DROPPED by the LSH bucket kernel
+    (NULL bucket array → out of the bucket equi-join), never hashed
+    into bucket 0 of every table where it would surface as a phantom
+    NULL-cos_sim neighbor."""
     from spotify_app_etl_spark.operators import similarity as SIM
 
     rng_rows = [(i, [float((i * 7 + d) % 5) + 0.1 for d in range(8)]) for i in range(30)]
@@ -983,12 +991,9 @@ def test_lsh_null_embedding_dropped_by_both_impls(spark):
         [(0, [0.1 + float(d % 5) for d in range(8)])],
         "query_id long, embedding array<double>",
     )
-    for impl in ("expr", "arrow"):
-        out = SIM.cosine_topk_lsh(
-            queries, corpus, k=30, planes=2, tables=4, impl=impl
-        ).collect()
-        assert 99 not in {r["corpus_id"] for r in out}, impl
-        assert all(r["cos_sim"] is not None for r in out), impl
+    out = SIM.cosine_topk_lsh(queries, corpus, k=30, planes=2, tables=4).collect()
+    assert 99 not in {r["corpus_id"] for r in out}
+    assert all(r["cos_sim"] is not None for r in out)
 
 
 def test_cell_rank_arrow_matches_expression(spark):
@@ -1109,19 +1114,13 @@ def test_index_writers_validate_mode_and_dim(spark, tmp_path):
 def test_element_null_and_nan_vectors_never_hash_to_bucket_zero(spark):
     """A vector CONTAINING a NULL or NaN passes isNotNull() (the array
     itself is non-null) but folds every projection to NULL/NaN — it
-    must get a NULL bucket on both impls (dropping out of the bucket
-    join), never bucket 0 where it would shadow real neighbors."""
+    must get a NULL bucket (dropping out of the bucket join), never
+    bucket 0 where it would shadow real neighbors."""
     import pyspark.sql.functions as F
 
     rows = [(1, [1.0, 2.0, 3.0]), (2, [1.0, None, 3.0]),
             (3, [1.0, float("nan"), 3.0]), (4, None)]
     df = spark.createDataFrame(rows, "vid long, v array<double>")
-    expr = df.select(
-        "vid", SIM.hyperplane_bucket(F.col("v"), planes=4, table=0).alias("b")
-    )
-    got = {r["vid"]: r["b"] for r in expr.collect()}
-    assert got[1] is not None
-    assert got[2] is None and got[3] is None and got[4] is None
     arrow = df.select("vid", SIM._hyperplane_buckets_arrow(2, 4)(F.col("v")).alias("b"))
     got_a = {r["vid"]: r["b"] for r in arrow.collect()}
     assert got_a[1] is not None

@@ -22,7 +22,7 @@ import re
 
 import pytest
 
-from spotify_app_etl_spark.operators.dedup import release_cached
+from spotify_app_etl_spark.operators.persist import release_cached
 from spotify_app_etl_spark.registry import load_all
 
 SF = "/root/testdata/sf0.001"

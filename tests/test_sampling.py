@@ -140,6 +140,7 @@ def test_leakage_safe_split_keeps_clusters_together(spark):
     per-doc hash split cannot guarantee."""
     from spotify_app_etl_spark.io import load_table
     from spotify_app_etl_spark.operators import dedup as DD
+    from spotify_app_etl_spark.operators.persist import release_cached
     from spotify_app_etl_spark.registry import load_all
 
     sf = "/root/testdata/sf0.001"
@@ -148,7 +149,7 @@ def test_leakage_safe_split_keeps_clusters_together(spark):
     pairs = DD.ngram_jaccard_pairs(
         load_table(spark, sf, "documents"), "text", "doc_id", n=3, threshold=0.5
     ).collect()
-    DD.release_cached()
+    release_cached()
     assert pairs, "fixture lost its near-dup pairs"
     straddling = [
         (p.id_a, p.id_b) for p in pairs if assign[p.id_a] != assign[p.id_b]

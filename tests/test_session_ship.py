@@ -55,3 +55,47 @@ def test_ship_package_once_per_application(spark):
     before = _zip_path(spark).stat().st_mtime_ns
     S._ship_package(spark)  # second call: no rebuild, no re-register error
     assert _zip_path(spark).stat().st_mtime_ns == before
+
+
+# ---------------------------------------------------------------------------
+# Session set-up happens once, at the boundary where a session comes in.
+# ---------------------------------------------------------------------------
+
+_AQE = "spark.sql.adaptive.enabled"
+
+
+def test_engine_calls_keep_a_callers_conf_override(spark, sf_dir):
+    """Readers and ETL steps take the session as configured: inside
+    ``adaptive_off`` they must not turn AQE back on."""
+    from spotify_app_etl_spark import etl
+    from spotify_app_etl_spark.io import load_table
+    from spotify_app_etl_spark.operators.checkpoint import adaptive_off
+
+    with adaptive_off(spark):
+        load_table(spark, sf_dir, "events")
+        assert spark.conf.get(_AQE) == "false"
+        etl.extract_followed_artists(
+            spark, None, items=[{"id": "a1", "name": "x", "genres": ["pop"]}]
+        )
+        assert spark.conf.get(_AQE) == "false"
+    assert spark.conf.get(_AQE) == "true"
+
+
+def test_driver_boundary_configures_an_outside_session(spark, sf_dir):
+    """An external driver hands in its own session (here: non-UTC, none
+    of the engine's confs); ``entry`` and every ``queries()`` callable
+    configure it before running."""
+    import __spark_entry__ as se
+
+    s = spark.newSession()
+    tz = "spark.sql.session.timeZone"
+    for run in (
+        lambda: se.entry(s),
+        lambda: se.queries()["q01_pricing_summary"](s, sf_dir),
+    ):
+        s.conf.set(tz, "America/New_York")
+        assert run().count() > 0
+        assert s.conf.get(tz) == "UTC"
+    assert int(
+        s.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    ) == 32 * s.sparkContext.defaultParallelism

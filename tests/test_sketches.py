@@ -90,7 +90,7 @@ def test_registered_queries_emit_scalar_columns_only(spark):
     this is a full-surface sweep — marked slow, and caches released
     per query so 153 plans don't accumulate storage in one session.
     """
-    from spotify_app_etl_spark.operators.dedup import release_cached
+    from spotify_app_etl_spark.operators.persist import release_cached
 
     offenders = {}
     for name, q in load_all().items():
