@@ -1,10 +1,13 @@
 """Readers and writers.
 
-Readers: typed Parquet loaders for the driver testdata (schema pinned,
-events nanosecond-timestamp normalization). They take a session already
-configured by :func:`session.configure_session` — done once where the
-session comes in (``registry.queries()``, ``__spark_entry__.entry``,
-:func:`session.get_spark`) — and never re-apply the confs themselves.
+Readers: typed Parquet loaders for the driver testdata. Each table is
+opened with an explicit read schema built from ``schemas.TESTDATA`` and
+the file's own parquet footer (see :func:`load_table`), so building a
+plan or opening the inputs launches no Spark job. They take a session
+already configured by :func:`session.configure_session` — done once
+where the session comes in (``registry.queries()``,
+``__spark_entry__.entry``, :func:`session.get_spark`) — and never
+re-apply the confs themselves.
 
 Writers: Parquet/CSV/JSON and the JDBC snapshot-replace sink that
 mirrors the reference's load stage (spotify-etl.py:209-215,
@@ -21,7 +24,11 @@ shuffle).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import json
+import os
+
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from spotify_app_etl_spark import schemas
 
@@ -31,26 +38,81 @@ TESTDATA_TABLES = tuple(schemas.TESTDATA)
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table as a typed DataFrame.
 
-    ``events.ts`` is parquet TIMESTAMP(MICROS, isAdjustedToUTC=false),
-    which Spark reads as TIMESTAMP_NTZ — the same naive-local semantics
-    DuckDB gives it, keeping oracle comparisons exact. An events file
-    written through pandas stores TIMESTAMP(NANOS,false), which has no
-    Spark type; with ``spark.sql.legacy.parquet.nanosAsLong`` (set by
-    ``configure_session``) that scan yields epoch-nanos longs we convert
-    to NTZ at microsecond precision.
+    The read schema is the columns the file's footer holds, in footer
+    order, each with the type ``schemas.TESTDATA[name]`` declares. The
+    footer is read on the driver with pyarrow (well under a millisecond
+    for a local file), and ``spark.read.schema(...)`` skips Spark's
+    schema inference, which would otherwise launch one footer-reading
+    job per call. Drift still fails loudly:
+
+    - a footer column the table does not declare raises ``ValueError``
+      here, naming the file and the column;
+    - a declared column the file lacks is absent from the frame (never
+      an all-NULL column), so a query naming it fails at analysis;
+    - a stored type that cannot be read as the declared one (int64
+      where int32 is declared) fails at the first action.
+
+    ``events.ts`` always comes back as ``timestamp_ntz`` — the
+    naive-local semantics DuckDB gives it, keeping oracle comparisons
+    exact — whichever way the footer stores it:
+
+    - TIMESTAMP(MICROS or MILLIS, not UTC-adjusted), as the driver
+      testdata stores it, reads as TIMESTAMP_NTZ directly;
+    - a UTC-adjusted TIMESTAMP, or Spark's default INT96, also reads as
+      TIMESTAMP_NTZ directly: Spark takes its UTC wall clock, what a
+      cast to NTZ gives in the configured UTC session;
+    - TIMESTAMP(NANOS), as pandas writes it, has no Spark type; under
+      ``spark.sql.legacy.parquet.nanosAsLong`` (set by
+      ``configure_session``) it is read as epoch-nanosecond longs and
+      converted to NTZ at microsecond precision.
+
+    ``sf_dir`` is a local directory; ``{name}.parquet`` in it is a file
+    or a directory of part files, whose first part's footer is read.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # integer division: epoch-nanos exceed double's 2^53 exact
-            # range, so a float divide would corrupt the microsecond digit
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz")
+    path = f"{sf_dir}/{name}.parquet"
+    footer = pq.read_metadata(_first_part(path)).schema
+    declared = {f.name: f for f in schemas.TESTDATA[name].fields}
+    nanos_ts = name == "events" and _stored_as_nanos(footer, "ts")
+    if nanos_ts:
+        declared["ts"] = T.StructField("ts", T.LongType())
+    fields = []
+    for col in footer.to_arrow_schema().names:
+        if col not in declared:
+            raise ValueError(
+                f"{path}: column {col!r} is not declared for table {name!r} "
+                "in spotify_app_etl_spark.schemas"
             )
-        elif ts_type == "timestamp":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        fields.append(declared[col])
+    df = spark.read.schema(T.StructType(fields)).parquet(path)
+    if nanos_ts:
+        # integer division: epoch-nanos exceed double's 2^53 exact
+        # range, so a float divide would corrupt the microsecond digit
+        df = df.withColumn(
+            "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz")
+        )
     return df
+
+
+def _first_part(path: str) -> str:
+    """``path`` itself, or the first data file of a part-file directory."""
+    if not os.path.isdir(path):
+        return path
+    parts = sorted(
+        f for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    if not parts:
+        raise FileNotFoundError(f"{path}: no parquet part files")
+    return os.path.join(path, parts[0])
+
+
+def _stored_as_nanos(footer, col: str) -> bool:
+    """Whether the footer stores ``col`` as TIMESTAMP(NANOS)."""
+    for i in range(len(footer)):
+        if footer.column(i).path == col:
+            logical = json.loads(footer.column(i).logical_type.to_json())
+            return logical.get("timeUnit") == "nanoseconds"
+    return False
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

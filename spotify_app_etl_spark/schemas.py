@@ -4,9 +4,10 @@ The reference never declares schemas — its column sets are implicit in
 dict-comprehension keys (spotify-etl.py:76-84, :100-106, :121-127,
 :169, :179-185, :196-202) and it erases all types at load time with
 ``df.astype(str)`` (spotify-etl.py:211). This module is the fix: one
-typed schema per table, used for every read, ``from_json`` flatten and
-``createDataFrame`` so schema drift fails loudly instead of silently
-changing output (SURVEY.md §1.3-1.4).
+typed schema per table, so schema drift fails loudly instead of
+silently changing output (SURVEY.md §1.3-1.4). Section A is the read
+schema of every testdata load (``io.load_table``); sections B and C
+type the ETL's ``from_json`` flatten and ``createDataFrame`` calls.
 """
 
 from __future__ import annotations
@@ -15,9 +16,14 @@ from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # A. Driver testdata tables (/root/testdata/sf*/; FIXTURES.md §B).
+#    io.load_table opens each file with these types for the columns its
+#    parquet footer holds, so no Spark schema-inference job runs; a footer
+#    column not declared here raises ValueError, and
+#    tests/test_io.py pins every testdata footer to these schemas.
 #    events.ts is stored as parquet TIMESTAMP(MICROS) → TIMESTAMP_NTZ; an
-#    events file written through pandas stores TIMESTAMP(NANOS), scanned as
-#    LongType (see session.RUNTIME_CONFS) and converted in io.load_table.
+#    events file written through pandas stores TIMESTAMP(NANOS), which
+#    io.load_table reads as LongType (see session.RUNTIME_CONFS) and
+#    converts to TIMESTAMP_NTZ.
 # ---------------------------------------------------------------------------
 
 REGION = T.StructType(
@@ -94,7 +100,8 @@ LINEITEM = T.StructType(
 )
 
 #: ``ts`` is parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) → NTZ, as
-#: o_orderdate; io.load_table normalizes older nanos-long encodings too.
+#: o_orderdate; io.load_table also reads the UTC-adjusted, INT96 and
+#: pandas NANOS encodings as NTZ.
 EVENTS = T.StructType(
     [
         T.StructField("event_id", T.LongType()),

@@ -151,6 +151,124 @@ def test_testdata_footers_match_declared_schemas(spark):
             assert got == want, f"{sf_dir.name}/{name}: {got} != {want}"
 
 
+def test_loading_every_testdata_table_runs_no_spark_job(spark):
+    """Opening the inputs launches no Spark job: every table at every
+    scale is read with its declared schema (no footer-inference job)
+    and comes back with the declared types."""
+    from pathlib import Path
+
+    sc = spark.sparkContext
+    group = "test_io_load_table_zero_jobs"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        for sf_dir in sorted(Path(SF).parent.glob("sf*")):
+            for name, schema in schemas.TESTDATA.items():
+                df = load_table(spark, str(sf_dir), name)
+                declared = {f.name: f.dataType.simpleString() for f in schema.fields}
+                assert dict(df.dtypes) == declared, f"{sf_dir.name}/{name}"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def _write_nation(path, **columns):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    base = {
+        "n_nationkey": pa.array([0, 1, 2], pa.int32()),
+        "n_name": pa.array(["ALGERIA", "ARGENTINA", "BRAZIL"]),
+        "n_regionkey": pa.array([0, 1, 1], pa.int32()),
+    }
+    base.update(columns)
+    pq.write_table(pa.table({k: v for k, v in base.items() if v is not None}),
+                   str(path / "nation.parquet"))
+
+
+def test_undeclared_column_fails_at_load(spark, tmp_path):
+    import pyarrow as pa
+
+    _write_nation(tmp_path, n_comment=pa.array(["a", "b", "c"]))
+    with pytest.raises(ValueError, match=r"nation\.parquet.*'n_comment'"):
+        load_table(spark, str(tmp_path), "nation")
+
+
+def test_incompatible_stored_type_fails_at_first_action(spark, tmp_path):
+    import pyarrow as pa
+
+    _write_nation(tmp_path, n_nationkey=pa.array([0, 1, 2], pa.int64()))
+    df = load_table(spark, str(tmp_path), "nation")  # plan only: no job
+    assert dict(df.dtypes)["n_nationkey"] == "int"
+    with pytest.raises(Exception, match="n_nationkey"):
+        df.collect()
+
+
+def test_missing_declared_column_is_absent_not_null(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    _write_nation(tmp_path, n_name=None)
+    df = load_table(spark, str(tmp_path), "nation")
+    assert df.columns == ["n_nationkey", "n_regionkey"]
+    assert sorted(tuple(r) for r in df.collect()) == [(0, 0), (1, 1), (2, 1)]
+    with pytest.raises(AnalysisException):
+        df.select("n_name")
+
+
+# 2024-03-01 12:34:56.789123 is ~1.7e18 epoch nanoseconds, far past 2^53,
+# where a float divide would corrupt the microsecond digit.
+_TS = ["2024-03-01 12:34:56.789123", "1999-12-31 23:59:59.000001", "2001-02-03 04:05:06"]
+
+
+@pytest.mark.parametrize(
+    "encoding", ["micros", "nanos_pandas", "utc_adjusted", "int96_spark"]
+)
+def test_events_ts_encodings_read_as_ntz(spark, tmp_path, encoding):
+    """Each stored encoding of ``events.ts`` reads back as
+    ``timestamp_ntz`` holding the written wall-clock values at
+    microsecond precision (``int96_spark``: a part-file directory
+    written by Spark's default timestamp writer)."""
+    import datetime as dt
+    import json
+    from pathlib import Path
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    want = [dt.datetime.fromisoformat(s) for s in _TS]
+    assert all(int(pd.Timestamp(w).value) > 2**53 for w in want)
+    path = str(tmp_path / "events.parquet")
+    if encoding == "nanos_pandas":
+        # one extra nanosecond digit, dropped by the microsecond floor
+        ts = pd.to_datetime(want) + pd.to_timedelta(456, unit="ns")
+        pd.DataFrame({"event_id": range(len(_TS)), "ts": ts}).to_parquet(path, index=False)
+    elif encoding == "int96_spark":
+        spark.createDataFrame(
+            list(enumerate(want)), "event_id long, ts timestamp"
+        ).coalesce(1).write.parquet(path)
+    else:
+        tz = "UTC" if encoding == "utc_adjusted" else None
+        pq.write_table(pa.table({
+            "event_id": pa.array(range(len(_TS)), pa.int64()),
+            "ts": pa.array(want, pa.timestamp("us", tz=tz)),
+        }), path)
+    footer = pq.read_metadata(next(Path(path).glob("*.parquet"), path))
+    ts_col = footer.schema.column(1)
+    stored = json.loads(ts_col.logical_type.to_json())
+    assert (ts_col.physical_type, stored.get("timeUnit"), stored.get("isAdjustedToUTC")) == {
+        "micros": ("INT64", "microseconds", False),
+        "nanos_pandas": ("INT64", "nanoseconds", False),
+        "utc_adjusted": ("INT64", "microseconds", True),
+        "int96_spark": ("INT96", None, None),
+    }[encoding]
+
+    df = load_table(spark, str(tmp_path), "events")
+    assert dict(df.dtypes) == {"event_id": "bigint", "ts": "timestamp_ntz"}
+    got = [r.ts for r in df.orderBy("event_id").collect()]
+    assert got == want
+
+
 def test_compact_parquet_reduces_file_count(spark, tmp_path):
     """200 tiny files -> sized file count; rows and values survive."""
     src = str(tmp_path / "small_files")
