@@ -73,26 +73,8 @@ def main() -> None:
         "unbounded side, scans without pushed filters when the query",
         "filters, Python stages in a pure-relational plan.",
         "",
-        "Since r08 BOTH arms of every `bench_fn` query are audited: the",
-        "bare name is the rider-free variant perfbench times; the",
-        "`(fn)` row is the proof-laden arm the driver's correctness",
-        "sweep executes. The `(fn)` rows' NLJ counts (1-4) are the",
-        "1-row broadcast verification scalars (recall / parity /",
-        "idempotence riders) cross-joined onto the output — every",
-        "broadcast side is a single row, the shape",
-        "tests/test_plan_audit.py allowlists and the r07 verdict's",
-        "anti-pattern sweep verified across all 30 crossJoin sites.",
-        "",
-        "Known-intended exceptions: `ns_sim_topk_bruteforce` carries a",
-        "BroadcastNestedLoopJoin BY DESIGN — it is the exact baseline",
-        "whose broadcast side is the bounded query set; the LSH/IVF",
-        "variants are the scale path. `ns_hybrid_rrf_search` shows two",
-        "NLJs for the same reason: the 1-row BM25 corpus-stats scalar",
-        "join and the single-query-vector cosine baseline — both",
-        "broadcast sides are O(1) in corpus size. Python stages (`py`",
-        "column) appear only in Arrow-kernel operators (minhash/",
-        "hyperplane signatures, winnowing fingerprints, multimodal",
-        "decode, Bloom probe), never in relational plans.",
+        "A query with a `bench_fn` gets a second `(fn)` row: the arm the",
+        "driver's correctness sweep executes, next to the variant perfbench times.",
         "",
         "| query | wall_s | shuffles | broadcasts | codegen | scans | pushed | NLJ | cartesian | py |",
         "| --- | --- | --- | --- | --- | --- | --- | --- | --- | --- |",

@@ -9,7 +9,7 @@ reference ETL pipeline (Johnsteer/Spotify-App-ETL, surveyed in
 - declarative DataFrame plans optimized by Catalyst (``plans``),
 - a paginated / rate-limited REST source re-expressed as a connector
   (``sources.rest``; reference: spotify-etl.py:47-75),
-- the full ETL dataflow as a composable pipeline (``etl.pipeline``),
+- the full ETL dataflow as a composable pipeline (``etl.run_pipeline``),
 - LLM-data-pipeline operators designed for 100 TB scale
   (``operators``: dedup, similarity search, text analysis, multimodal),
 - Structured Streaming jobs over event data (``streaming``).

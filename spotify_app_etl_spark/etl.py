@@ -17,16 +17,21 @@ Spark-first design decisions:
   collapse (A7) inside Catalyst — visible to column pruning and
   whole-stage codegen, unlike the reference's Python loops.
 - **Fan-out is partitioned.** Per-playlist track fetches (the
-  reference's ``asyncio.gather`` at :240-241) run as ``mapInPandas``
-  over the playlist-id DataFrame — each executor fetches its
-  partition's playlists with a per-partition rate limiter
-  (sources.rest.TokenBucket), which is how a 1000-executor cluster
+  reference's ``asyncio.gather`` at :240-241) run as one
+  :func:`sources.rest.fan_out` over the playlist-id DataFrame — each
+  executor fetches its partition's playlists through its own
+  per-partition TokenBucket, which is how a 1000-executor cluster
   bounds global request rate with zero coordination.
 - **Enrichment joins, not loops.** Audio features fetched via
   sources.rest.batched_lookup (≤100 ids/request, dedup-before-fetch
-  like :250) and joined back to tracks as a broadcast join.
+  like :250), the same fan-out, and joined back to tracks.
+- **One rate.** ``run_pipeline(rate=...)`` bounds the requests per
+  second of each of the three request paths — the driver's page
+  chains, the per-playlist fan-out and the lookup — retries included;
+  see :func:`run_pipeline` for how sinks written concurrently
+  multiply it.
 
-Every function takes a session already configured by
+The pipeline runs on a session already configured by
 :func:`spotify_app_etl_spark.session.configure_session`, which also
 ships this package to the Python workers the fan-out and the lookup
 run on.
@@ -37,7 +42,7 @@ from __future__ import annotations
 import json
 import logging
 import time
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -45,13 +50,21 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from spotify_app_etl_spark import schemas
 from spotify_app_etl_spark.sources import rest
-from spotify_app_etl_spark.sources.spotify_mock import (
-    MockSpotifyTransport,
-    audio_features_for_ids,
-)
+from spotify_app_etl_spark.sources.spotify_mock import MockSpotifyTransport
 
 #: raw page items land as single-column JSON-string DataFrames
 _RAW = "payload string"
+
+#: The reference's four driver-side endpoints: start URL and page cap.
+#: Recently-played serves one page of ≤50 (A2); the others paginate
+#: fully (A1), which fixes the reference's one-page truncation of the
+#: followed artists (§2.9 bug 4).
+ENDPOINTS: dict[str, tuple[str, int]] = {
+    "playlists": ("/me/playlists?offset=0", 10_000),
+    "saved": ("/me/tracks?offset=0", 10_000),
+    "recent": ("/me/player/recently-played", 1),
+    "followed": ("/me/following?type=artist&offset=0", 10_000),
+}
 
 
 def _json_df(spark: SparkSession, items: list[dict]) -> DataFrame:
@@ -65,10 +78,8 @@ def _json_df(spark: SparkSession, items: list[dict]) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def extract_playlists(spark: SparkSession, transport, items=None) -> DataFrame:
-    """GET /me/playlists, cursor-paginated (A1) → flatten (:76-84)."""
-    if items is None:
-        items = rest.fetch_paginated(transport, "/me/playlists?offset=0")
+def extract_playlists(spark: SparkSession, items: list[dict]) -> DataFrame:
+    """The ``playlists`` endpoint's items → flatten (:76-84)."""
     parsed = _json_df(spark, items).select(
         F.from_json("payload", schemas.PLAYLIST_JSON).alias("p")
     )
@@ -104,28 +115,18 @@ def _flatten_track_items(parsed: DataFrame, *extra: str) -> DataFrame:
 
 
 def extract_playlist_tracks(
-    spark: SparkSession,
-    playlists: DataFrame,
-    transport,
-    fanout_partitions: int = 8,
-    rate_per_partition: float | None = None,
+    playlists: DataFrame, transport, rate: float | None
 ) -> DataFrame:
     """Per-playlist paginated track fetch, distributed (A1 + A16).
 
-    The playlist-id DataFrame repartitions to ``fanout_partitions``;
-    each partition walks its playlists' page chains through one
-    TokenBucket (global rate = fanout_partitions x rate_per_partition —
-    the §2.9 bug-1 fix at cluster scale). Pass a rate when the
-    transport is a real API; the in-process mock runs unthrottled.
+    One :func:`sources.rest.fan_out` over the playlist ids: each
+    partition walks its playlists' page chains through its bucket, so
+    the fan-out as a whole stays within ``rate``.
     Null-track items are dropped declaratively after the flatten (:106).
     """
-    def fetch(parts: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bucket = (
-            rest.TokenBucket(rate=rate_per_partition, burst=5.0)
-            if rate_per_partition
-            else None
-        )
-        for pdf in parts:
+
+    def walk(frames, bucket) -> Iterator[pd.DataFrame]:
+        for pdf in frames:
             for pid in pdf["id"]:
                 items = rest.fetch_paginated(
                     transport, f"/playlists/{pid}/tracks?offset=0", bucket
@@ -138,10 +139,8 @@ def extract_playlist_tracks(
                         }
                     )
 
-    raw = (
-        playlists.select("id")
-        .repartition(fanout_partitions)
-        .mapInPandas(fetch, schema="playlist_id string, payload string")
+    raw = rest.fan_out(
+        playlists.select("id"), walk, "playlist_id string, payload string", rate
     )
     parsed = raw.select(
         "playlist_id", F.from_json("payload", schemas.TRACK_ITEM_JSON).alias("t")
@@ -152,22 +151,16 @@ def extract_playlist_tracks(
     return flat.filter(F.col("id").isNotNull())  # null-track guard (:106)
 
 
-def extract_saved_tracks(spark: SparkSession, transport, items=None) -> DataFrame:
-    """GET /me/tracks (A1) → flatten with added_at (:121-127)."""
-    if items is None:
-        items = rest.fetch_paginated(transport, "/me/tracks?offset=0")
+def extract_saved_tracks(spark: SparkSession, items: list[dict]) -> DataFrame:
+    """The ``saved`` endpoint's items → flatten with added_at (:121-127)."""
     parsed = _json_df(spark, items).select(
         F.from_json("payload", schemas.TRACK_ITEM_JSON).alias("t")
     )
     return _flatten_track_items(parsed).select("id", "name", "artist", "album", "added_at")
 
 
-def extract_recent_tracks(spark: SparkSession, transport, items=None) -> DataFrame:
-    """GET /me/player/recently-played — single page ≤50 (A2, :177-185)."""
-    if items is None:
-        items = rest.fetch_paginated(
-            transport, "/me/player/recently-played", max_pages=1
-        )
+def extract_recent_tracks(spark: SparkSession, items: list[dict]) -> DataFrame:
+    """The ``recent`` endpoint's single page ≤50 (A2) → flatten (:177-185)."""
     parsed = _json_df(spark, items).select(
         F.from_json("payload", schemas.TRACK_ITEM_JSON).alias("t")
     )
@@ -176,15 +169,12 @@ def extract_recent_tracks(spark: SparkSession, transport, items=None) -> DataFra
     )
 
 
-def extract_followed_artists(spark: SparkSession, transport, items=None) -> DataFrame:
-    """GET /me/following?type=artist → flatten (:196-202).
+def extract_followed_artists(spark: SparkSession, items: list[dict]) -> DataFrame:
+    """The ``followed`` endpoint's items → flatten (:196-202).
 
     genres stays ``array<string>``; the reference's ', '-joined string
     (:199, A7) is derived by the caller via ``concat_ws`` when needed.
-    Paginates fully — the reference's one-page truncation is §2.9 bug 4.
     """
-    if items is None:
-        items = rest.fetch_paginated(transport, "/me/following?type=artist&offset=0")
     parsed = _json_df(spark, items).select(
         F.from_json("payload", schemas.ARTIST_JSON).alias("a")
     )
@@ -197,46 +187,29 @@ def extract_followed_artists(spark: SparkSession, transport, items=None) -> Data
     )
 
 
-def _audio_lookup_via(transport):
-    """Batched /audio-features lookup THROUGH the injected transport
-    (picklable — ships to executors inside batched_lookup's
-    mapInPandas closure), with the bounded 429 retry every other
-    endpoint gets. This is what makes a real-API run fetch real
-    features: a hardwired mock function here would silently fabricate
-    feature rows (or crash on real base-62 track ids) no matter what
-    transport the caller injected."""
-
-    def lookup(ids: list[str]) -> list[dict]:
-        payload = rest.request_with_retry(
-            transport, "/audio-features?ids=" + ",".join(ids)
-        )
-        return payload.get("audio_features", [])
-
-    return lookup
-
-
 def enrich_audio_features(
-    spark: SparkSession,
     playlist_tracks: DataFrame,
     saved_tracks: DataFrame,
-    transport=None,
+    transport,
+    rate: float | None,
 ) -> DataFrame:
     """Union+distinct track ids (:250-251, A11) → batched lookup (A3)
-    over ``transport``'s ``/audio-features`` endpoint (direct mock fn
-    when no transport is given — standalone/unit use only)."""
+    over ``transport``'s ``/audio-features`` endpoint, with the bounded
+    429 retry every other endpoint gets, within ``rate``."""
     ids = (
         playlist_tracks.select("id")
         .union(saved_tracks.select("id"))
         .filter(F.col("id").isNotNull())
         .distinct()
     )
-    lookup = audio_features_for_ids if transport is None else _audio_lookup_via(transport)
-    return rest.batched_lookup(
-        ids,
-        lookup,
-        result_schema=schemas.AUDIO_FEATURES,
-        batch_size=100,
-    )
+
+    def lookup(chunk: list[str], bucket) -> list[dict]:
+        payload = rest.request_with_retry(
+            transport, "/audio-features?ids=" + ",".join(chunk), bucket
+        )
+        return payload.get("audio_features", [])
+
+    return rest.batched_lookup(ids, lookup, schemas.AUDIO_FEATURES, 100, rate)
 
 
 # ---------------------------------------------------------------------------
@@ -249,18 +222,25 @@ def run_pipeline(
     sf_dir: str,
     transport=None,
     ingest_date: bool = True,
-    fanout_partitions: int = 8,
-    rate_per_partition: float | None = None,
+    rate: float | None = None,
 ) -> dict[str, DataFrame]:
     """Full ETL run → the six reference tables as typed DataFrames.
 
     ``ingest_date=True`` stamps one run-level timestamp like :264-266;
     oracle-checked queries pass False for determinism.
-    ``fanout_partitions`` / ``rate_per_partition`` pass through to the
-    distributed per-playlist fan-out — a real-API caller MUST set a
-    rate (global request rate = partitions × per-partition rate) or
-    the fan-out hammers the API unthrottled; the in-process mock runs
-    unthrottled by default.
+
+    ``rate`` (requests/s) bounds each of the three request paths, 429
+    retries included: the four driver page chains (one shared bucket,
+    while the plans are built), the per-playlist fan-out and the
+    audio-features lookup (:data:`sources.rest.FANOUT_WIDTH` buckets
+    at ``rate / FANOUT_WIDTH`` each). In any window of w seconds a
+    path issues at most its buckets' burst plus ``rate`` × w requests.
+    The fan-out and the lookup run in separate stages when the sinks
+    are written one at a time; writing sinks concurrently multiplies
+    the rate, because every concurrent job that runs a fan-out or
+    lookup stage brings its own buckets. ``None`` (the default) is
+    unthrottled, the in-process mock's setting; a real-API caller must
+    set a rate.
     """
     log = logging.getLogger(__name__)
     started = time.monotonic()
@@ -270,16 +250,8 @@ def run_pipeline(
     # threads — extract-phase parity with the reference's
     # asyncio.gather (spotify-etl.py:230-234, A16). The per-playlist
     # track fan-out below remains the distributed half.
-    pages = rest.fetch_paginated_many(
-        transport,
-        {
-            "playlists": ("/me/playlists?offset=0", 10_000),
-            "saved": ("/me/tracks?offset=0", 10_000),
-            "recent": ("/me/player/recently-played", 1),
-            "followed": ("/me/following?type=artist&offset=0", 10_000),
-        },
-    )
-    playlists = extract_playlists(spark, transport, items=pages["playlists"])
+    pages = rest.fetch_paginated_many(transport, ENDPOINTS, rate)
+    playlists = extract_playlists(spark, pages["playlists"])
     # persist: consumed twice (membership output + the distinct-ids feed
     # of the audio-features lookup) — without it the distributed REST
     # fan-out would execute twice. Registered with the session-wide
@@ -291,25 +263,17 @@ def run_pipeline(
     from spotify_app_etl_spark.operators.persist import scoped_persist
 
     playlist_tracks = scoped_persist(
-        extract_playlist_tracks(
-            spark,
-            playlists,
-            transport,
-            fanout_partitions=fanout_partitions,
-            rate_per_partition=rate_per_partition,
-        )
+        extract_playlist_tracks(playlists, transport, rate)
     )
-    saved = extract_saved_tracks(spark, transport, items=pages["saved"])
+    saved = extract_saved_tracks(spark, pages["saved"])
     tables: dict[str, DataFrame] = {
         "playlists": playlists,
         "playlists_tracks": playlist_tracks,
         "saved_tracks": saved,
-        "recent_tracks": extract_recent_tracks(spark, transport, items=pages["recent"]),
-        "followed_artists": extract_followed_artists(
-            spark, transport, items=pages["followed"]
-        ),
+        "recent_tracks": extract_recent_tracks(spark, pages["recent"]),
+        "followed_artists": extract_followed_artists(spark, pages["followed"]),
         "audio_features": enrich_audio_features(
-            spark, playlist_tracks, saved, transport=transport
+            playlist_tracks, saved, transport, rate
         ),
     }
     if ingest_date:

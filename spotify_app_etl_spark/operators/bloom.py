@@ -54,21 +54,6 @@ def _positions(keys: np.ndarray, n_hashes: int, m_bits: int) -> np.ndarray:
     )
 
 
-def build_bloom(keys: np.ndarray, fpp: float = 0.01) -> tuple[bytes, int, int]:
-    """Build a Bloom filter over local integer keys → (bitset, k, m).
-
-    Local/test reference path; for a DataFrame build side use
-    :func:`build_bloom_distributed`, which never materializes keys on
-    the driver.
-    """
-    n_hashes, m_bits = _bloom_params(len(keys), fpp)
-    bits = np.zeros((m_bits + 7) // 8, dtype=np.uint8)
-    if len(keys):
-        pos = _positions(np.asarray(keys), n_hashes, m_bits).ravel()
-        np.bitwise_or.at(bits, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-    return bits.tobytes(), n_hashes, m_bits
-
-
 def _bloom_params(n: int, fpp: float) -> tuple[int, int]:
     """Optimal (n_hashes, m_bits) for n keys at the target fpp."""
     if not 0.0 < fpp < 1.0:

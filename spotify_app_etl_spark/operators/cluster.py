@@ -38,7 +38,6 @@ Scale shape (the part that matters at 100 TB):
 from __future__ import annotations
 
 import logging
-import threading
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -50,27 +49,6 @@ from spotify_app_etl_spark.operators.checkpoint import (
 )
 
 log = logging.getLogger(__name__)
-
-#: Per-thread log of CC convergence round counts, so the bench harness
-#: can attribute iterative-query cost to iteration count vs per-round
-#: plan cost without re-running. Thread-local (concurrent queries
-#: can't clobber each other's attribution) and a LIST (a query that
-#: runs CC more than once records every call, not just the last).
-_rounds_log = threading.local()
-
-
-def _record_rounds(rounds: int) -> None:
-    if not hasattr(_rounds_log, "log"):
-        _rounds_log.log = []
-    _rounds_log.log.append(rounds)
-
-
-def take_rounds() -> list[int]:
-    """Drain and return the convergence round counts recorded on THIS
-    thread since the last drain (empty if no CC call converged)."""
-    out = getattr(_rounds_log, "log", [])
-    _rounds_log.log = []
-    return out
 
 
 def connected_components(
@@ -170,7 +148,6 @@ def _cc_loop(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
         prev = updated
         labels = updated.drop("__changed")
         if changed == 0:
-            _record_rounds(rounds)
             log.info("connected_components: converged in %d rounds", rounds)
             release_local_checkpoint(edges)  # result only needs `updated`
             return labels
@@ -284,7 +261,6 @@ def connected_components_star(
         release_local_checkpoint(edges)
         edges = rewired
         if changed == 0:
-            _record_rounds(rounds)
             log.info("connected_components_star: converged in %d rounds", rounds)
             break
     else:

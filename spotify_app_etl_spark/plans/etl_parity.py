@@ -26,21 +26,19 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from spotify_app_etl_spark import etl
 from spotify_app_etl_spark.registry import query
-from spotify_app_etl_spark.sources.spotify_mock import MockSpotifyTransport
 
 #: SQL fragment: numeric part of a 'tr_<n>' track id.
 _N = "CAST(replace(id, 'tr_', '') AS BIGINT)"
 
 
 def _tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return etl.run_pipeline(
-        spark, sf_dir, transport=MockSpotifyTransport(sf_dir), ingest_date=False
-    )
+    """The six tables as ``etl_load`` lands them, on the mock transport."""
+    return etl.run_pipeline(spark, sf_dir, ingest_date=False)
 
 
 @query(
     "etl_playlists",
-    note="A1 paginated scan + A5 from_json flatten of GET /me/playlists",
+    note="A1 paginated scan + A5 from_json flatten of the playlists endpoint",
     oracle="""
 SELECT 'pl_' || o_orderkey AS id,
        'https://api.example.local/playlists/pl_' || o_orderkey AS href,
@@ -57,7 +55,7 @@ WHERE o_orderkey % 10 = 0
     tags=("etl", "connector"),
 )
 def etl_playlists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return etl.extract_playlists(spark, MockSpotifyTransport(sf_dir))
+    return _tables(spark, sf_dir)["playlists"]
 
 
 @query(
@@ -77,9 +75,7 @@ WHERE l_orderkey % 10 = 0 AND l_linenumber <> 6
     tags=("etl", "connector", "fanout"),
 )
 def etl_playlists_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    transport = MockSpotifyTransport(sf_dir)
-    playlists = etl.extract_playlists(spark, transport)
-    return etl.extract_playlist_tracks(spark, playlists, transport)
+    return _tables(spark, sf_dir)["playlists_tracks"]
 
 
 @query(
@@ -96,7 +92,7 @@ FROM part WHERE p_partkey % 3 = 0
     tags=("etl", "connector"),
 )
 def etl_saved_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return etl.extract_saved_tracks(spark, MockSpotifyTransport(sf_dir))
+    return _tables(spark, sf_dir)["saved_tracks"]
 
 
 @query(
@@ -113,7 +109,7 @@ FROM events ORDER BY ts DESC, event_id DESC LIMIT 50
     tags=("etl", "connector"),
 )
 def etl_recent_tracks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return etl.extract_recent_tracks(spark, MockSpotifyTransport(sf_dir))
+    return _tables(spark, sf_dir)["recent_tracks"]
 
 
 @query(
@@ -133,7 +129,7 @@ FROM supplier
     tags=("etl", "connector"),
 )
 def etl_followed_artists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    artists = etl.extract_followed_artists(spark, MockSpotifyTransport(sf_dir))
+    artists = _tables(spark, sf_dir)["followed_artists"]
     # emit the reference-shaped ', '-joined string (A7) for comparison
     return artists.select(
         "id",
@@ -178,8 +174,7 @@ FROM ids WHERE {_N} % 97 <> 0 OR {_N} = 0
     tags=("etl", "connector", "batched-lookup"),
 )
 def etl_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tables = _tables(spark, sf_dir)
-    return tables["audio_features"]
+    return _tables(spark, sf_dir)["audio_features"]
 
 
 @query(

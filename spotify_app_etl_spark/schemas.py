@@ -255,7 +255,8 @@ _TRACK = T.StructType(
     ]
 )
 
-#: one item of GET /me/playlists (flattened at spotify-etl.py:76-84)
+#: one item of the ``playlists`` endpoint (etl.ENDPOINTS; flattened at
+#: spotify-etl.py:76-84)
 PLAYLIST_JSON = T.StructType(
     [
         T.StructField("id", T.StringType()),
@@ -270,8 +271,8 @@ PLAYLIST_JSON = T.StructType(
     ]
 )
 
-#: one item of GET /playlists/{id}/tracks (flattened at :100-106) or
-#: GET /me/tracks (:121-127; added_at) or /me/player/recently-played (:179-185)
+#: one item of GET /playlists/{id}/tracks (flattened at :100-106) or of
+#: the ``saved`` (:121-127; added_at) or ``recent`` (:179-185) endpoint
 TRACK_ITEM_JSON = T.StructType(
     [
         T.StructField("track", _TRACK),
@@ -280,7 +281,7 @@ TRACK_ITEM_JSON = T.StructType(
     ]
 )
 
-#: one item of GET /me/following?type=artist (flattened at :196-202)
+#: one item of the ``followed`` endpoint (flattened at :196-202)
 ARTIST_JSON = T.StructType(
     [
         T.StructField("id", T.StringType()),

@@ -11,15 +11,20 @@ SURVEY.md §2) with the bugs fixed (§2.9):
   independent DataFrames.
 - **Batched-key lookup** (A3): the reference splits an id list into
   ≤100-id chunks with duplicated divisible/remainder loops
-  (spotify-etl.py:151-166). Here: one expression — ids DataFrame →
-  ``floor(row_number/batch)`` → ``collect_list`` → ``mapInPandas``
-  fetch, distributed so 10⁹ keys fan out across executors.
+  (spotify-etl.py:151-166). Here: one :func:`fan_out` over the ids
+  DataFrame, each partition slicing its ids into ≤ batch-size chunks,
+  distributed so 10⁹ keys fan out across executors.
 - **Rate limiting** (A4): the reference constructs its
   ``asyncio.Semaphore(5)`` per call so the cap never binds
-  (spotify-etl.py:48, §2.9 bug 1). Fixed properly for a cluster: a
-  token bucket *per partition* with rate = global_rate /
-  num_partitions — a global cap with no cross-executor coordination;
-  ``repartition(k)`` on the batch table bounds global concurrency.
+  (spotify-etl.py:48, §2.9 bug 1). Here one ``rate`` in requests/s
+  binds on every request, retries included. Overlapped driver page
+  chains share one :class:`TokenBucket` at ``rate``;
+  :func:`fan_out` repartitions its keys to :data:`FANOUT_WIDTH`
+  partitions, each with its own bucket at ``rate / FANOUT_WIDTH`` — a
+  global cap with no cross-executor coordination. Every bucket holds
+  :data:`BURST` tokens, so in any window of w seconds a path issues at
+  most (its buckets × BURST) + rate × w requests. ``rate=None`` is
+  unthrottled.
 - **Retry** (A4): the reference recurses unboundedly on HTTP 429
   (spotify-etl.py:59, §2.9 bug 3). Here: bounded attempts honoring
   ``Retry-After``, then raise (Spark's ``spark.task.maxFailures``
@@ -35,7 +40,7 @@ from __future__ import annotations
 
 import logging
 import time
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -46,6 +51,12 @@ log = logging.getLogger(__name__)
 
 Transport = Callable[[str], dict]
 
+#: Partitions of every distributed fan-out: its per-partition buckets
+#: at ``rate / FANOUT_WIDTH`` add up to ``rate``.
+FANOUT_WIDTH = 8
+#: Token capacity of every bucket the connector builds.
+BURST = 2.0
+
 
 class RetryBudgetExceeded(RuntimeError):
     """Raised when a request keeps returning 429 past max_attempts."""
@@ -55,9 +66,9 @@ class RetryBudgetExceeded(RuntimeError):
 class TokenBucket:
     """Minimal token-bucket rate limiter (monotonic clock).
 
-    One instance per partition; callers size ``rate`` as
-    global_rate / num_partitions so the fleet-wide request rate is
-    bounded without any cross-executor coordination.
+    :func:`fan_out` builds one instance per partition at
+    ``rate / FANOUT_WIDTH``, so the fleet-wide request rate is bounded
+    without any cross-executor coordination.
 
     ``acquire`` is thread-safe (one lock around the read-modify-write):
     :func:`fetch_paginated_many` shares a single bucket across its
@@ -71,7 +82,7 @@ class TokenBucket:
     """
 
     rate: float  # tokens per second
-    burst: float = 1.0
+    burst: float = BURST
     _tokens: float = field(default=0.0, init=False)
     _last: float = field(default=0.0, init=False)
 
@@ -192,8 +203,7 @@ def fetch_paginated(
 def fetch_paginated_many(
     transport: Transport,
     starts: dict[str, tuple[str, int | None]],
-    bucket: TokenBucket | None = None,
-    max_workers: int = 4,
+    rate: float | None = None,
 ) -> dict[str, list[dict]]:
     """Overlap INDEPENDENT endpoint page-chains on driver threads.
 
@@ -203,9 +213,9 @@ def fetch_paginated_many(
     ``asyncio.gather`` (spotify-etl.py:230-234, operator A16). Driver
     threads give the same wall-clock overlap for the extract phase; the
     *distributed* half of A16 (per-playlist and per-batch fan-out)
-    lives in ``mapInPandas`` (see :func:`batched_lookup`), which is the
-    part that must scale past one machine. A shared ``bucket`` keeps
-    the overlapped chains under one global rate cap.
+    lives in :func:`fan_out`, which is the part that must scale past
+    one machine. All chains draw from one bucket at ``rate``, so the
+    overlap never exceeds it.
 
     ``starts`` maps name → (start url, max_pages); returns name →
     items. Exceptions propagate from whichever chain failed.
@@ -217,7 +227,8 @@ def fetch_paginated_many(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=max(1, min(max_workers, len(starts)))) as ex:
+    bucket = TokenBucket(rate) if rate else None
+    with ThreadPoolExecutor(max_workers=max(1, len(starts))) as ex:
         futures = {
             name: ex.submit(fetch_paginated, transport, url, bucket, max_pages)
             for name, (url, max_pages) in starts.items()
@@ -225,22 +236,46 @@ def fetch_paginated_many(
         return {name: f.result() for name, f in futures.items()}
 
 
+def fan_out(
+    keys: DataFrame,
+    fetch_partition: Callable[
+        [Iterator[pd.DataFrame], TokenBucket | None], Iterator[pd.DataFrame]
+    ],
+    schema,
+    rate: float | None,
+) -> DataFrame:
+    """Distributed REST fan-out (A16): ``keys`` repartitioned to
+    :data:`FANOUT_WIDTH` partitions, each running
+    ``fetch_partition(frames, bucket)`` under its own bucket at
+    ``rate / FANOUT_WIDTH`` (None when ``rate`` is None).
+    ``fetch_partition`` passes the bucket to every request it makes.
+
+    The repartition pins the partition count the rate is divided by:
+    without it the key table could carry any number of partitions and
+    the fleet-wide request rate would multiply accordingly.
+    """
+
+    def run(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        bucket = TokenBucket(rate / FANOUT_WIDTH) if rate else None
+        return fetch_partition(frames, bucket)
+
+    return keys.repartition(FANOUT_WIDTH).mapInPandas(run, schema=schema)
+
+
 def batched_lookup(
     ids: DataFrame,
-    fetch_batch: Callable[[list[str]], list[dict]],
+    fetch_batch: Callable[[list[str], TokenBucket | None], list[dict]],
     result_schema,
-    batch_size: int = 100,
-    max_concurrent_partitions: int | None = None,
-    global_rate: float | None = None,
+    batch_size: int,
+    rate: float | None = None,
 ) -> DataFrame:
     """Distributed batched-key REST lookup (A3, scaled out).
 
     ``ids`` — single-column DataFrame of keys (dedupe upstream, mirroring
-    the reference's dedup-before-fetch at spotify-etl.py:250).
-    Plan: ``repartition(k)`` to bound concurrency (and set the
-    per-partition token-bucket rate) → ``mapInPandas`` slicing each
-    partition's ids into ≤ ``batch_size`` chunks and calling
-    ``fetch_batch`` per chunk.
+    the reference's dedup-before-fetch at spotify-etl.py:250). One
+    :func:`fan_out`: each partition slices its ids into ≤ ``batch_size``
+    chunks and calls ``fetch_batch(chunk, bucket)`` per chunk, which
+    passes the bucket to its requests.
 
     Batch COMPOSITION is partitioning-dependent, but the result rows
     are per-id and independent of how ids were grouped into requests,
@@ -251,28 +286,16 @@ def batched_lookup(
     bottleneck entirely at the cost of at most one under-full request
     per partition.
     """
-    id_col = ids.columns[0]
-    # The per-partition bucket rate divides global_rate by the number of
-    # partitions that will actually run concurrently — so ALWAYS pin the
-    # partition count. Without this repartition the id table could carry
-    # arbitrarily many partitions and the fleet-wide request rate would
-    # multiply accordingly.
-    n_parts = max_concurrent_partitions or 8
-    batches = ids.select(F.col(id_col).alias("__id")).repartition(n_parts)
 
-    def run(parts: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bucket = (
-            TokenBucket(rate=global_rate / n_parts, burst=2.0) if global_rate else None
-        )
-
+    def run(
+        frames: Iterator[pd.DataFrame], bucket: TokenBucket | None
+    ) -> Iterator[pd.DataFrame]:
         def fetch(chunk: list[str]) -> Iterator[pd.DataFrame]:
-            if bucket is not None:
-                bucket.acquire()
-            rows = fetch_batch(chunk)
+            rows = fetch_batch(chunk, bucket)
             if rows:
                 yield pd.DataFrame(rows)
 
-        # `parts` yields one pandas frame PER ARROW BATCH (default
+        # `frames` yields one pandas frame PER ARROW BATCH (default
         # 10,000 rows), not per partition — chunking each frame
         # independently would issue an under-full trailing request
         # every 10,000 ids instead of once per partition (the
@@ -280,7 +303,7 @@ def batched_lookup(
         # API). Carry the remainder across frames; flush it once at
         # partition end.
         pending: list[str] = []
-        for pdf in parts:
+        for pdf in frames:
             pending.extend(pdf["__id"].tolist())
             full_end = len(pending) - (len(pending) % batch_size)
             for i in range(0, full_end, batch_size):
@@ -289,4 +312,5 @@ def batched_lookup(
         if pending:
             yield from fetch(pending)
 
-    return batches.mapInPandas(run, schema=result_schema)
+    keys = ids.select(F.col(ids.columns[0]).alias("__id"))
+    return fan_out(keys, run, result_schema, rate)

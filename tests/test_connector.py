@@ -171,7 +171,7 @@ def test_batched_lookup_respects_batch_cap_and_covers_all_ids(spark):
     id is fetched exactly once regardless of partitioning."""
     ids = spark.range(0, 537).selectExpr("CAST(id AS STRING) AS id")
 
-    def fetch(chunk):
+    def fetch(chunk, bucket):
         return [{"id": x, "batch_len": len(chunk)} for x in chunk]
 
     out = rest.batched_lookup(
@@ -188,32 +188,30 @@ def test_batched_lookup_at_most_one_underfull_request_per_partition(spark):
     spanning many batches still issues at most ONE under-full request
     (tagging each output row with its request's size makes the request
     log visible through the collected rows)."""
-    ids = spark.range(0, 1000).selectExpr("CAST(id AS STRING) AS id")
+    n = 4000
+    ids = spark.range(0, n).selectExpr("CAST(id AS STRING) AS id")
 
-    def fetch(chunk):
+    def fetch(chunk, bucket):
         return [{"id": x, "batch_len": len(chunk)} for x in chunk]
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "100")
     try:
         out = rest.batched_lookup(
-            ids,
-            fetch,
-            result_schema="id string, batch_len int",
-            batch_size=64,
-            max_concurrent_partitions=2,
+            ids, fetch, result_schema="id string, batch_len int", batch_size=64
         ).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    assert len(out) == 1000
-    assert {r.id for r in out} == {str(i) for i in range(1000)}
+    assert len(out) == n
+    assert {r.id for r in out} == {str(i) for i in range(n)}
     assert max(r.batch_len for r in out) <= 64
-    # At most one under-full request per partition: with 2 partitions
-    # the rows carried by under-full requests total < 2 × batch_size.
-    # (Without the remainder carry, every 100-row Arrow frame ends in
-    # a 36-id request — 180 such rows per partition — and this fails.)
+    # At most one under-full request per partition: over FANOUT_WIDTH
+    # partitions the rows carried by under-full requests total
+    # < FANOUT_WIDTH × batch_size. (Without the remainder carry, every
+    # 100-row Arrow frame ends in a 36-id request — 500 ids per
+    # partition give 180 such rows each, 1440 in all — and this fails.)
     underfull_rows = [r for r in out if r.batch_len < 64]
-    assert len(underfull_rows) < 64 * 2, len(underfull_rows)
+    assert len(underfull_rows) < 64 * rest.FANOUT_WIDTH, len(underfull_rows)
 
 
 def _static_refresh():
@@ -390,3 +388,115 @@ def test_retry_after_is_clamped_and_truncation_is_loud():
         logger.removeHandler(handler)
     assert len(items) == 3
     assert any("capped" in r.getMessage() for r in records)
+
+
+def _track_item(n: int) -> dict:
+    return {
+        "track": {
+            "id": f"tr_{n}",
+            "name": f"track {n}",
+            "artists": [{"name": "artist"}],
+            "album": {"name": "album"},
+        },
+        "added_at": None,
+        "played_at": None,
+    }
+
+
+class _RecordingAPI:
+    """Spotify-shaped fake that appends each request's ``(path kind,
+    time.monotonic())`` to a Spark accumulator, the only way requests
+    made inside executor tasks reach the driver.
+
+    Sized so every request path overruns its burst: the driver endpoints
+    make 17 requests (4 + 6 + 6 pages, one recently-played page); 16
+    playlists of 4 track pages make 64 ``/playlists/*/tracks`` requests
+    and 6400 distinct track ids, hence 64 or more ``/audio-features``
+    requests of ≤100 ids.
+    """
+
+    PAGE, TRACK_PAGE, TRACK_PAGES = 4, 100, 4
+    DRIVER = {
+        "/me/playlists": (16, lambda k: {"id": f"pl_{k}", "name": f"playlist {k}"}),
+        "/me/tracks": (24, _track_item),
+        "/me/following": (24, lambda k: {"id": f"ar_{k}", "name": f"artist {k}"}),
+    }
+
+    def __init__(self, log):
+        import threading
+
+        self.log = log
+        # the driver's page chains share this instance across threads,
+        # and a driver-side accumulator add is a read-modify-write
+        self._lock = threading.Lock()
+
+    def __getstate__(self):
+        return {"log": self.log}
+
+    def __setstate__(self, state):
+        self.__init__(state["log"])
+
+    def __call__(self, url: str) -> dict:
+        from urllib.parse import parse_qs, urlparse
+
+        from spotify_app_etl_spark.sources.spotify_mock import audio_features_for_ids
+
+        u = urlparse(url)
+        query = parse_qs(u.query)
+        if u.path == "/audio-features":
+            kind = "lookup"
+        elif u.path.startswith("/playlists/"):
+            kind = "tracks"
+        else:
+            kind = "driver"
+        with self._lock:
+            self.log.add(((kind, time.monotonic()),))
+        if kind == "lookup":
+            return {"audio_features": audio_features_for_ids(query["ids"][0].split(","))}
+        if u.path == "/me/player/recently-played":
+            return {"items": [_track_item(k) for k in range(self.PAGE)], "next": None}
+        offset = int(query["offset"][0])
+        if kind == "tracks":
+            pid = int(u.path.split("/")[2].removeprefix("pl_"))
+            size, total = self.TRACK_PAGE, self.TRACK_PAGE * self.TRACK_PAGES
+            first = pid * total
+            items = [_track_item(first + k) for k in range(offset, offset + size)]
+        else:
+            size, (total, make) = self.PAGE, self.DRIVER[u.path]
+            items = [make(k) for k in range(offset, offset + size)]
+        more = offset + size < total
+        nxt = url.replace(f"offset={offset}", f"offset={offset + size}") if more else None
+        return {"items": items, "next": nxt}
+
+
+def test_run_pipeline_rate_binds_on_every_request_path(spark):
+    """``run_pipeline(rate=R)`` bounds all three request paths — the
+    driver's page chains, the per-playlist fan-out and the audio-features
+    lookup: no time window of w seconds holds more than the path's total
+    burst plus R × w requests (plus R × 0.1 s of slack for the delay
+    between a token grant and the request's timestamp)."""
+    from pyspark.accumulators import AddingAccumulatorParam
+
+    from spotify_app_etl_spark import etl
+    from spotify_app_etl_spark.operators.persist import cache_scope
+
+    rate = 40.0
+    log = spark.sparkContext.accumulator((), AddingAccumulatorParam(()))
+    with cache_scope():
+        tables = etl.run_pipeline(
+            spark, "", transport=_RecordingAPI(log), ingest_date=False, rate=rate
+        )
+        for df in tables.values():
+            df.collect()
+
+    fan_out_burst = rest.FANOUT_WIDTH * rest.BURST
+    bursts = {"driver": rest.BURST, "tracks": fan_out_burst, "lookup": fan_out_burst}
+    for kind, burst in bursts.items():
+        times = sorted(t for k, t in log.value if k == kind)
+        assert len(times) > 2 * burst, (kind, len(times))  # overruns its burst
+        excess = max(
+            (j - i + 1) - rate * (times[j] - times[i])
+            for i in range(len(times))
+            for j in range(i, len(times))
+        )
+        assert excess <= burst + rate * 0.1, (kind, excess, burst)

@@ -75,7 +75,7 @@ def test_engine_calls_keep_a_callers_conf_override(spark, sf_dir):
         load_table(spark, sf_dir, "events")
         assert spark.conf.get(_AQE) == "false"
         etl.extract_followed_artists(
-            spark, None, items=[{"id": "a1", "name": "x", "genres": ["pop"]}]
+            spark, [{"id": "a1", "name": "x", "genres": ["pop"]}]
         )
         assert spark.conf.get(_AQE) == "false"
     assert spark.conf.get(_AQE) == "true"
