@@ -10,6 +10,10 @@ expressions, replacing the dict comprehensions at :76-84, :100-106,
 
 Spark-first design decisions:
 
+- **Driver pages are local relations.** The four driver-side
+  endpoints' items enter Spark as an Arrow-built table of JSON
+  strings, which plans as a ``LocalRelation``: writing them runs no
+  Python worker. Python workers run only in the two REST fan-outs.
 - **Flattening is declarative.** Raw payload items enter Spark as JSON
   strings; ``from_json`` with the explicit schemas in
   :mod:`spotify_app_etl_spark.schemas` + ``select`` expressions do the
@@ -21,10 +25,13 @@ Spark-first design decisions:
   :func:`sources.rest.fan_out` over the playlist-id DataFrame — each
   executor fetches its partition's playlists through its own
   per-partition TokenBucket, which is how a 1000-executor cluster
-  bounds global request rate with zero coordination.
+  bounds global request rate with zero coordination. A fan-out is one
+  wave of tasks (at most the context's default parallelism) and each
+  task returns its rows in frames of up to 10,000.
 - **Enrichment joins, not loops.** Audio features fetched via
-  sources.rest.batched_lookup (≤100 ids/request, dedup-before-fetch
-  like :250), the same fan-out, and joined back to tracks.
+  sources.rest.batched_lookup (≤100 ids/request), the same fan-out,
+  which fetches each distinct id once (dedup-before-fetch like :250),
+  and joined back to tracks.
 - **One rate.** ``run_pipeline(rate=...)`` bounds the requests per
   second of each of the three request paths — the driver's page
   chains, the per-playlist fan-out and the lookup — retries included;
@@ -45,6 +52,7 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -52,8 +60,9 @@ from spotify_app_etl_spark import schemas
 from spotify_app_etl_spark.sources import rest
 from spotify_app_etl_spark.sources.spotify_mock import MockSpotifyTransport
 
-#: raw page items land as single-column JSON-string DataFrames
-_RAW = "payload string"
+#: Most rows per frame the playlist walk yields: Arrow's default batch
+#: size, so a task's buffered rows stay bounded.
+_WALK_ROWS = 10_000
 
 #: The reference's four driver-side endpoints: start URL and page cap.
 #: Recently-played serves one page of ≤50 (A2); the others paginate
@@ -68,9 +77,14 @@ ENDPOINTS: dict[str, tuple[str, int]] = {
 
 
 def _json_df(spark: SparkSession, items: list[dict]) -> DataFrame:
-    return spark.createDataFrame(
-        [(json.dumps(item),) for item in items], schema=_RAW
-    )
+    """``items`` as a one-column ``payload string`` table of JSON.
+
+    Built from a pyarrow table so it plans as a ``LocalRelation``, even
+    when empty: a list of tuples plans as an RDD scan, which runs a
+    Python stage, and an empty pandas frame falls back to one.
+    """
+    strings = pa.array([json.dumps(item) for item in items], pa.string())
+    return spark.createDataFrame(pa.table({"payload": strings}))
 
 
 # ---------------------------------------------------------------------------
@@ -121,23 +135,26 @@ def extract_playlist_tracks(
 
     One :func:`sources.rest.fan_out` over the playlist ids: each
     partition walks its playlists' page chains through its bucket, so
-    the fan-out as a whole stays within ``rate``.
+    the fan-out as a whole stays within ``rate``, and returns its rows
+    in frames of up to :data:`_WALK_ROWS`, one Arrow batch each.
     Null-track items are dropped declaratively after the flatten (:106).
     """
 
     def walk(frames, bucket) -> Iterator[pd.DataFrame]:
+        ids: list[str] = []
+        payloads: list[str] = []
         for pdf in frames:
             for pid in pdf["id"]:
                 items = rest.fetch_paginated(
                     transport, f"/playlists/{pid}/tracks?offset=0", bucket
                 )
-                if items:
-                    yield pd.DataFrame(
-                        {
-                            "playlist_id": pid,
-                            "payload": [json.dumps(item) for item in items],
-                        }
-                    )
+                ids.extend([pid] * len(items))
+                payloads.extend(json.dumps(item) for item in items)
+                if len(payloads) >= _WALK_ROWS:
+                    yield pd.DataFrame({"playlist_id": ids, "payload": payloads})
+                    ids, payloads = [], []
+        if payloads:
+            yield pd.DataFrame({"playlist_id": ids, "payload": payloads})
 
     raw = rest.fan_out(
         playlists.select("id"), walk, "playlist_id string, payload string", rate
@@ -193,14 +210,14 @@ def enrich_audio_features(
     transport,
     rate: float | None,
 ) -> DataFrame:
-    """Union+distinct track ids (:250-251, A11) → batched lookup (A3)
-    over ``transport``'s ``/audio-features`` endpoint, with the bounded
-    429 retry every other endpoint gets, within ``rate``."""
+    """Union track ids (:250-251, A11) → batched lookup (A3) over
+    ``transport``'s ``/audio-features`` endpoint, with the bounded 429
+    retry every other endpoint gets, within ``rate``. The lookup's
+    fan-out fetches each distinct id once (the reference's ``set``)."""
     ids = (
         playlist_tracks.select("id")
         .union(saved_tracks.select("id"))
         .filter(F.col("id").isNotNull())
-        .distinct()
     )
 
     def lookup(chunk: list[str], bucket) -> list[dict]:
@@ -226,14 +243,19 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Full ETL run → the six reference tables as typed DataFrames.
 
+    The driver's pages become local relations; Python workers run only
+    in the two fan-outs, the playlist walk and the audio-features
+    lookup, one wave of tasks each.
+
     ``ingest_date=True`` stamps one run-level timestamp like :264-266;
     oracle-checked queries pass False for determinism.
 
     ``rate`` (requests/s) bounds each of the three request paths, 429
     retries included: the four driver page chains (one shared bucket,
     while the plans are built), the per-playlist fan-out and the
-    audio-features lookup (:data:`sources.rest.FANOUT_WIDTH` buckets
-    at ``rate / FANOUT_WIDTH`` each). In any window of w seconds a
+    audio-features lookup (:func:`sources.rest.fan_out_width` buckets
+    at ``rate / width`` each, at most
+    :data:`sources.rest.FANOUT_WIDTH`). In any window of w seconds a
     path issues at most its buckets' burst plus ``rate`` × w requests.
     The fan-out and the lookup run in separate stages when the sinks
     are written one at a time; writing sinks concurrently multiplies

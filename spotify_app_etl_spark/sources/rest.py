@@ -12,19 +12,21 @@ SURVEY.md §2) with the bugs fixed (§2.9):
 - **Batched-key lookup** (A3): the reference splits an id list into
   ≤100-id chunks with duplicated divisible/remainder loops
   (spotify-etl.py:151-166). Here: one :func:`fan_out` over the ids
-  DataFrame, each partition slicing its ids into ≤ batch-size chunks,
-  distributed so 10⁹ keys fan out across executors.
+  DataFrame, each partition slicing its distinct ids into ≤ batch-size
+  chunks, distributed so 10⁹ keys fan out across executors.
 - **Rate limiting** (A4): the reference constructs its
   ``asyncio.Semaphore(5)`` per call so the cap never binds
   (spotify-etl.py:48, §2.9 bug 1). Here one ``rate`` in requests/s
   binds on every request, retries included. Overlapped driver page
   chains share one :class:`TokenBucket` at ``rate``;
-  :func:`fan_out` repartitions its keys to :data:`FANOUT_WIDTH`
-  partitions, each with its own bucket at ``rate / FANOUT_WIDTH`` — a
-  global cap with no cross-executor coordination. Every bucket holds
-  :data:`BURST` tokens, so in any window of w seconds a path issues at
-  most (its buckets × BURST) + rate × w requests. ``rate=None`` is
-  unthrottled.
+  :func:`fan_out` hash-partitions its keys to :func:`fan_out_width`
+  partitions (the live context's default parallelism, capped at
+  :data:`FANOUT_WIDTH`), each with its own bucket at ``rate / width``
+  — a global cap with no cross-executor coordination. Every bucket
+  holds :data:`BURST` tokens, so in any window of w seconds a path
+  issues at most (its buckets × BURST) + rate × w requests, and a
+  fan-out's burst never exceeds FANOUT_WIDTH × BURST. ``rate=None``
+  is unthrottled.
 - **Retry** (A4): the reference recurses unboundedly on HTTP 429
   (spotify-etl.py:59, §2.9 bug 3). Here: bounded attempts honoring
   ``Retry-After``, then raise (Spark's ``spark.task.maxFailures``
@@ -45,14 +47,14 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 log = logging.getLogger(__name__)
 
 Transport = Callable[[str], dict]
 
-#: Partitions of every distributed fan-out: its per-partition buckets
-#: at ``rate / FANOUT_WIDTH`` add up to ``rate``.
+#: Most partitions a distributed fan-out runs: caps its total burst at
+#: ``FANOUT_WIDTH × BURST`` however many cores the context has.
 FANOUT_WIDTH = 8
 #: Token capacity of every bucket the connector builds.
 BURST = 2.0
@@ -67,7 +69,7 @@ class TokenBucket:
     """Minimal token-bucket rate limiter (monotonic clock).
 
     :func:`fan_out` builds one instance per partition at
-    ``rate / FANOUT_WIDTH``, so the fleet-wide request rate is bounded
+    ``rate / width``, so the fleet-wide request rate is bounded
     without any cross-executor coordination.
 
     ``acquire`` is thread-safe (one lock around the read-modify-write):
@@ -236,6 +238,13 @@ def fetch_paginated_many(
         return {name: f.result() for name, f in futures.items()}
 
 
+def fan_out_width(spark: SparkSession) -> int:
+    """Partitions of a :func:`fan_out` in ``spark``'s live context: its
+    default parallelism, so the Python tasks run in one wave, capped at
+    :data:`FANOUT_WIDTH`."""
+    return min(FANOUT_WIDTH, spark.sparkContext.defaultParallelism)
+
+
 def fan_out(
     keys: DataFrame,
     fetch_partition: Callable[
@@ -244,22 +253,31 @@ def fan_out(
     schema,
     rate: float | None,
 ) -> DataFrame:
-    """Distributed REST fan-out (A16): ``keys`` repartitioned to
-    :data:`FANOUT_WIDTH` partitions, each running
+    """Distributed REST fan-out (A16): the distinct rows of ``keys``,
+    hash-partitioned to :func:`fan_out_width` partitions, each running
     ``fetch_partition(frames, bucket)`` under its own bucket at
-    ``rate / FANOUT_WIDTH`` (None when ``rate`` is None).
+    ``rate / width`` (None when ``rate`` is None).
     ``fetch_partition`` passes the bucket to every request it makes.
 
     The repartition pins the partition count the rate is divided by:
     without it the key table could carry any number of partitions and
-    the fleet-wide request rate would multiply accordingly.
+    the fleet-wide request rate would multiply accordingly. Duplicate
+    keys are dropped inside that partitioning — the reference's
+    dedup-before-fetch (spotify-etl.py:250) — so each key is fetched
+    once and the fan-out costs one shuffle: the hash partitioning
+    already satisfies the ``distinct``.
     """
+    width = fan_out_width(keys.sparkSession)
 
     def run(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bucket = TokenBucket(rate / FANOUT_WIDTH) if rate else None
+        bucket = TokenBucket(rate / width) if rate else None
         return fetch_partition(frames, bucket)
 
-    return keys.repartition(FANOUT_WIDTH).mapInPandas(run, schema=schema)
+    return (
+        keys.repartition(width, *keys.columns)
+        .distinct()
+        .mapInPandas(run, schema=schema)
+    )
 
 
 def batched_lookup(
@@ -271,11 +289,11 @@ def batched_lookup(
 ) -> DataFrame:
     """Distributed batched-key REST lookup (A3, scaled out).
 
-    ``ids`` — single-column DataFrame of keys (dedupe upstream, mirroring
-    the reference's dedup-before-fetch at spotify-etl.py:250). One
-    :func:`fan_out`: each partition slices its ids into ≤ ``batch_size``
-    chunks and calls ``fetch_batch(chunk, bucket)`` per chunk, which
-    passes the bucket to its requests.
+    ``ids`` — single-column DataFrame of keys, duplicates allowed. One
+    :func:`fan_out`, which drops the duplicates: each partition slices
+    its distinct ids into ≤ ``batch_size`` chunks and calls
+    ``fetch_batch(chunk, bucket)`` per chunk, which passes the bucket
+    to its requests.
 
     Batch COMPOSITION is partitioning-dependent, but the result rows
     are per-id and independent of how ids were grouped into requests,

@@ -205,13 +205,34 @@ def test_batched_lookup_at_most_one_underfull_request_per_partition(spark):
     assert len(out) == n
     assert {r.id for r in out} == {str(i) for i in range(n)}
     assert max(r.batch_len for r in out) <= 64
-    # At most one under-full request per partition: over FANOUT_WIDTH
+    # At most one under-full request per partition: over the fan-out's
     # partitions the rows carried by under-full requests total
-    # < FANOUT_WIDTH × batch_size. (Without the remainder carry, every
-    # 100-row Arrow frame ends in a 36-id request — 500 ids per
-    # partition give 180 such rows each, 1440 in all — and this fails.)
+    # < width × batch_size. (Without the remainder carry, every 100-row
+    # Arrow frame ends in a 36-id request — ~500 ids per partition of 8
+    # give ~180 such rows each, ~1440 in all — and this fails.)
     underfull_rows = [r for r in out if r.batch_len < 64]
-    assert len(underfull_rows) < 64 * rest.FANOUT_WIDTH, len(underfull_rows)
+    assert len(underfull_rows) < 64 * rest.fan_out_width(spark), len(underfull_rows)
+
+
+def test_fan_out_fetches_each_distinct_key_once(spark):
+    """Duplicate keys are dropped before the fetch (the reference's
+    dedup-before-fetch), and the fan-out runs one task per partition of
+    its live width."""
+    import pandas as pd
+
+    keys = spark.range(0, 600, numPartitions=5).selectExpr(
+        "CAST(id % 200 AS STRING) AS k"
+    )
+
+    def fetch(frames, bucket):
+        for pdf in frames:
+            yield pd.DataFrame({"k": pdf["k"]})
+
+    out = rest.fan_out(keys, fetch, "k string", None)
+    fetched = [r.k for r in out.collect()]
+    assert sorted(fetched) == sorted(str(i) for i in range(200))
+    width = min(rest.FANOUT_WIDTH, spark.sparkContext.defaultParallelism)
+    assert out.rdd.getNumPartitions() == width
 
 
 def _static_refresh():
@@ -489,7 +510,7 @@ def test_run_pipeline_rate_binds_on_every_request_path(spark):
         for df in tables.values():
             df.collect()
 
-    fan_out_burst = rest.FANOUT_WIDTH * rest.BURST
+    fan_out_burst = rest.fan_out_width(spark) * rest.BURST
     bursts = {"driver": rest.BURST, "tracks": fan_out_burst, "lookup": fan_out_burst}
     for kind, burst in bursts.items():
         times = sorted(t for k, t in log.value if k == kind)
@@ -500,3 +521,64 @@ def test_run_pipeline_rate_binds_on_every_request_path(spark):
             for j in range(i, len(times))
         )
         assert excess <= burst + rate * 0.1, (kind, excess, burst)
+
+
+#: logical-plan nodes that run Python, or scan an RDD (a PythonRDD when
+#: built from a local list)
+_PYTHON_NODES = ("Python", "Pandas", "Arrow", "LogicalRDD", "ExternalRDD")
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a JVM logical plan, depth first (children only)."""
+    names, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in reversed(range(children.size())))
+    return names
+
+
+def _python_nodes(names: list[str]) -> list[str]:
+    return [n for n in names if any(p in n for p in _PYTHON_NODES)]
+
+
+def _sits_on_fan_out(names: list[str]) -> bool:
+    """The one ``MapInPandas`` reads a hash repartition's distinct rows."""
+    i = names.index("MapInPandas")
+    return names[i + 1] in ("Deduplicate", "Aggregate") and (
+        names[i + 2] == "RepartitionByExpression"
+    )
+
+
+def test_etl_runs_python_only_in_its_two_fan_outs(spark, sf_dir):
+    """The four driver-side tables plan as local relations (empty ones
+    too), so writing them runs no Python stage; the playlist walk and
+    the audio-features lookup each plan one ``MapInPandas`` over their
+    fan-out."""
+    from spotify_app_etl_spark import etl
+    from spotify_app_etl_spark.operators.persist import cache_scope
+
+    driver = {
+        "playlists": etl.extract_playlists,
+        "saved_tracks": etl.extract_saved_tracks,
+        "recent_tracks": etl.extract_recent_tracks,
+        "followed_artists": etl.extract_followed_artists,
+    }
+    with cache_scope():
+        tables = etl.run_pipeline(spark, sf_dir, ingest_date=False)
+        for name, extract in driver.items():
+            for df in (tables[name], extract(spark, [])):
+                names = _plan_nodes(df._jdf.queryExecution().optimizedPlan())
+                assert _python_nodes(names) == [], (name, names)
+                assert "LocalRelation" in names, (name, names)
+        # the persisted walk's own plan; audio_features reads it from
+        # the cache, so its optimized plan holds the lookup alone
+        walk = _plan_nodes(tables["playlists_tracks"]._jdf.queryExecution().analyzed())
+        lookup = _plan_nodes(
+            tables["audio_features"]._jdf.queryExecution().optimizedPlan()
+        )
+        assert "InMemoryRelation" in lookup, lookup
+        for names in (walk, lookup):
+            assert _python_nodes(names) == ["MapInPandas"], names
+            assert _sits_on_fan_out(names), names
