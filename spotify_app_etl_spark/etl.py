@@ -16,10 +16,14 @@ Spark-first design decisions:
   Python worker. Python workers run only in the two REST fan-outs.
 - **Flattening is declarative.** Raw payload items enter Spark as JSON
   strings; ``from_json`` with the explicit schemas in
-  :mod:`spotify_app_etl_spark.schemas` + ``select`` expressions do the
+  :mod:`spotify_app_etl_spark.schemas` + SQL projections do the
   nested-field projection (A5), first-artist access (A6) and genres
   collapse (A7) inside Catalyst — visible to column pruning and
-  whole-stage codegen, unlike the reference's Python loops.
+  whole-stage codegen, unlike the reference's Python loops. The
+  projections and filters are SQL strings (``selectExpr``,
+  ``filter("…")``): each ``F.col(...).alias(...)`` costs about two
+  dozen JVM round trips while the plan is built, where a
+  ``selectExpr`` is one call for all its columns.
 - **Fan-out is partitioned.** Per-playlist track fetches (the
   reference's ``asyncio.gather`` at :240-241) run as one
   :func:`sources.rest.fan_out` over the playlist-id DataFrame — each
@@ -97,34 +101,34 @@ def extract_playlists(spark: SparkSession, items: list[dict]) -> DataFrame:
     parsed = _json_df(spark, items).select(
         F.from_json("payload", schemas.PLAYLIST_JSON).alias("p")
     )
-    return parsed.select(
-        F.col("p.id").alias("id"),
-        F.col("p.href").alias("href"),
-        F.col("p.name").alias("name"),
-        F.col("p.owner.display_name").alias("owner"),
-        F.col("p.public").alias("public"),
-        F.col("p.collaborative").alias("collaborative"),
-        F.col("p.tracks.total").alias("tracks"),
+    return parsed.selectExpr(
+        "p.id AS id",
+        "p.href AS href",
+        "p.name AS name",
+        "p.owner.display_name AS owner",
+        "p.public AS public",
+        "p.collaborative AS collaborative",
+        "p.tracks.total AS tracks",
     )
 
 
 def _flatten_track_items(parsed: DataFrame, *extra: str) -> DataFrame:
     """Common track-item projection (:100-106, :121-127, :179-185):
     nested track fields + first-artist-only + album name."""
-    return parsed.select(
+    return parsed.selectExpr(
         *extra,
-        F.col("t.track.id").alias("id"),
-        F.col("t.track.name").alias("name"),
+        "t.track.id AS id",
+        "t.track.name AS name",
         # try_element_at: real payloads can carry "artists": [] (local
         # files, podcast edge cases) and ANSI mode — the Spark 4
         # default — turns element_at on an empty array into a
         # job-killing INVALID_ARRAY_INDEX; NULL artist is the right
         # answer (the mock always emits artists, so only live data
         # exercises this).
-        F.try_element_at(F.col("t.track.artists"), F.lit(1))["name"].alias("artist"),
-        F.col("t.track.album.name").alias("album"),
-        F.to_timestamp(F.col("t.added_at")).alias("added_at"),
-        F.to_timestamp(F.col("t.played_at")).alias("played_at"),
+        "try_element_at(t.track.artists, 1).name AS artist",
+        "t.track.album.name AS album",
+        "to_timestamp(t.added_at) AS added_at",
+        "to_timestamp(t.played_at) AS played_at",
     )
 
 
@@ -165,7 +169,7 @@ def extract_playlist_tracks(
     flat = _flatten_track_items(parsed, "playlist_id").select(
         "id", "name", "artist", "album", "playlist_id"
     )
-    return flat.filter(F.col("id").isNotNull())  # null-track guard (:106)
+    return flat.filter("id IS NOT NULL")  # null-track guard (:106)
 
 
 def extract_saved_tracks(spark: SparkSession, items: list[dict]) -> DataFrame:
@@ -195,12 +199,12 @@ def extract_followed_artists(spark: SparkSession, items: list[dict]) -> DataFram
     parsed = _json_df(spark, items).select(
         F.from_json("payload", schemas.ARTIST_JSON).alias("a")
     )
-    return parsed.select(
-        F.col("a.id").alias("id"),
-        F.col("a.name").alias("name"),
-        F.col("a.genres").alias("genres"),
-        F.col("a.popularity").alias("popularity"),
-        F.col("a.followers.total").alias("followers"),
+    return parsed.selectExpr(
+        "a.id AS id",
+        "a.name AS name",
+        "a.genres AS genres",
+        "a.popularity AS popularity",
+        "a.followers.total AS followers",
     )
 
 
@@ -217,7 +221,7 @@ def enrich_audio_features(
     ids = (
         playlist_tracks.select("id")
         .union(saved_tracks.select("id"))
-        .filter(F.col("id").isNotNull())
+        .filter("id IS NOT NULL")
     )
 
     def lookup(chunk: list[str], bucket) -> list[dict]:
@@ -314,11 +318,18 @@ def run_pipeline(
         # shifted by the UTC offset on any non-UTC driver. An AWARE
         # datetime goes through utctimetuple and hits the correct
         # instant regardless of the driver's OS TZ.
-        run_ts = _dt.datetime.now(_dt.timezone.utc)
+        stamp = F.lit(_dt.datetime.now(_dt.timezone.utc)).cast("timestamp")
         tables = {
-            name: df.withColumn("ingest_date", F.lit(run_ts).cast("timestamp"))
-            for name, df in tables.items()
+            name: df.withColumn("ingest_date", stamp) for name, df in tables.items()
         }
+    # One partition per driver-side table, so each sink is one file: a
+    # local relation is otherwise split into default-parallelism slices.
+    # The coalesce goes last because the optimizer evaluates a
+    # projection of a local relation (the from_json flatten, the stamp)
+    # while planning, and a coalesce beneath it would leave that work to
+    # a compiled task stage.
+    for name in ("playlists", "saved_tracks", "recent_tracks", "followed_artists"):
+        tables[name] = tables[name].coalesce(1)
     # plan-construction time only — execution happens lazily at the
     # sink/action; per-stage runtime metrics live in the Spark UI
     # (replacing the reference's wall-clock log, spotify-etl.py:285-286)

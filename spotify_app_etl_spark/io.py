@@ -15,6 +15,12 @@ mirrors the reference's load stage (spotify-etl.py:209-215,
 compatibility mode replacing the reference's ``df.astype(str)`` type
 erasure (spotify-etl.py:211; SURVEY.md §1.4).
 
+Commit records: :func:`write_commit` and :func:`read_commit`, the one
+commit point of the persisted count-min sketch and the sign-LSH, IVF
+and PQ indexes. Each commit is a numbered JSON file under
+``{path}/_commits/``, written by the driver under a temporary name and
+renamed into place; the latest record names the live generation.
+
 Scale notes: loads are plain ``spark.read.parquet`` scans — Catalyst
 handles predicate pushdown / column pruning / partition pruning, so at
 100 TB the same loader works as long as callers filter and select
@@ -26,6 +32,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import uuid
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -141,6 +149,96 @@ def stringify(df: DataFrame) -> DataFrame:
     lowercase; divergence documented per SURVEY.md §1.4 (bug, not ported).
     """
     return df.select([F.col(c).cast("string").alias(c) for c in df.columns])
+
+
+# ---------------------------------------------------------------------------
+# Commit records: the commit point of every persisted sketch and index
+# ---------------------------------------------------------------------------
+
+#: A committed record's file name under ``{path}/_commits/``; anything
+#: else there (a temporary name, a checksum file) is not a commit.
+_COMMIT_NAME = re.compile(r"(\d{20})\.json")
+
+
+def write_commit(spark: SparkSession, path: str, **record: int | None) -> int:
+    """Commit ``record`` as the next commit record of ``path``; returns
+    its number.
+
+    The record is a small JSON file written by the driver through the
+    Hadoop ``FileSystem`` API, so committing runs no Spark job and works
+    on any scheme the session's Hadoop conf reaches. It is written in
+    full under a temporary name in ``{path}/_commits/`` and then renamed
+    to the next number in sequence, never over an existing record:
+    readers see the whole record or none of it, and a commit that fails
+    at any point leaves the previous record the latest. One writer per
+    ``path`` at a time; a second writer that races to the same number
+    fails loudly instead of replacing the first one's record.
+    """
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs, cdir = _commit_dir(spark, path)
+    seq = _last_seq(fs, cdir) + 1
+    tmp = hpath(cdir, f"_{seq:020d}.{uuid.uuid4().hex}.tmp")
+    out = fs.create(tmp, False)
+    try:
+        out.write(json.dumps(record, sort_keys=True).encode())
+    finally:
+        out.close()
+    _publish(fs, tmp, hpath(cdir, f"{seq:020d}.json"))
+    return seq
+
+
+def _publish(fs, tmp, final) -> None:
+    """Rename the written record ``tmp`` to ``final``, which must not exist.
+
+    The existence check comes first because a local rename replaces an
+    existing file, and a Hadoop rename reports most failures by
+    returning false rather than raising.
+    """
+    if fs.exists(final) or not fs.rename(tmp, final):
+        fs.delete(tmp, False)
+        raise OSError(
+            f"commit record {final.toString()} exists or cannot be renamed into place"
+        )
+
+
+def read_commit(spark: SparkSession, path: str) -> dict | None:
+    """The latest commit record of ``path``, or None when it has none.
+
+    Reads the highest-numbered record under ``{path}/_commits/`` on the
+    driver (no Spark job). Only the absence of any record maps to None:
+    any other failure (IO, permissions, a corrupt record) raises, since
+    a writer that took it for a missing structure would start over at
+    generation 1 and silently drop what was committed.
+    """
+    fs, cdir = _commit_dir(spark, path)
+    seq = _last_seq(fs, cdir)
+    if seq == 0:
+        return None
+    stream = fs.open(spark._jvm.org.apache.hadoop.fs.Path(cdir, f"{seq:020d}.json"))
+    try:
+        data = spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream)
+    finally:
+        stream.close()
+    return json.loads(data)
+
+
+def _commit_dir(spark: SparkSession, path: str):
+    """The FileSystem and Hadoop path of ``{path}/_commits``."""
+    cdir = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "/_commits")
+    return cdir.getFileSystem(spark._jsc.hadoopConfiguration()), cdir
+
+
+def _last_seq(fs, cdir) -> int:
+    """The highest record number in ``cdir``, 0 when it holds none.
+
+    One driver-side listing, with one entry per commit made.
+    """
+    if not fs.exists(cdir):
+        return 0
+    names = (status.getPath().getName() for status in fs.listStatus(cdir))
+    return max(
+        (int(m[1]) for m in map(_COMMIT_NAME.fullmatch, names) if m), default=0
+    )
 
 
 def write_parquet(

@@ -192,7 +192,8 @@ def bpe_save(spark, merges: list[tuple[str, str]], path: str) -> None:
     # JVM-side literal rows below the budget (r11, guide §4):
     # createDataFrame from local data routes through Python-worker
     # serialization at a measured ~0.5 s-per-call warm in this
-    # environment (same finding as similarity._meta_row); the merge
+    # environment (same finding as similarity.ivf_index_write's
+    # centroid table); the merge
     # list is vocab-capped, so the literal path is the common case.
     if 3 * len(merges) <= 100_000:
         df = (

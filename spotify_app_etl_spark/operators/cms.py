@@ -27,16 +27,23 @@ riders) are stable, reproducible values.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from spotify_app_etl_spark import io
 
 #: Sketch schema: one row per non-zero counter.
-_SKETCH_COLS = ("d", "bucket", "cnt")
+_SKETCH_SCHEMA = "d int, bucket int, cnt bigint"
 
 
-def _bucket(key: Column, d: Column, width: int) -> Column:
-    """Row-``d`` bucket for ``key``: xxhash64 seeded by the row index.
-    pmod (not %) so negative hashes land in [0, width)."""
-    return F.pmod(F.xxhash64(key, d), F.lit(width)).cast("int")
+def _name(col: str) -> str:
+    """``col`` as a quoted SQL identifier."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _bucket(key: str, d: str, width: int) -> str:
+    """SQL for the row-``d`` bucket of ``key``: xxhash64 seeded by the
+    row index. pmod (not %) so negative hashes land in [0, width)."""
+    return f"CAST(pmod(xxhash64({key}, {d}), {width}) AS INT)"
 
 
 def _check_params(depth: int, width: int) -> None:
@@ -62,22 +69,34 @@ def cms_build(
     map-side — the per-partition sketch + tree-merge pattern expressed
     as one declarative groupBy.
     """
+    return _sum_counters(_increments(df, key_col, depth, width, weight_col))
+
+
+def _increments(
+    df: DataFrame, key_col: str, depth: int, width: int, weight_col: str | None
+) -> DataFrame:
+    """One ``(d, bucket, cnt)`` row per counter increment of ``df``.
+
+    SQL expressions throughout: each ``F.col``/``alias`` is several JVM
+    round trips while the plan is built.
+    """
     _check_params(depth, width)
-    w = F.lit(1).cast("long") if weight_col is None else F.coalesce(
-        F.col(weight_col).cast("long"), F.lit(0)
+    key = _name(key_col)
+    w = (
+        "1L"
+        if weight_col is None
+        else f"coalesce(CAST({_name(weight_col)} AS BIGINT), 0)"
     )
     return (
-        df.filter(F.col(key_col).isNotNull())
-        .select(F.col(key_col).alias("__k"), w.alias("__w"))
-        .select(
-            F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("d"),
-            "__k",
-            "__w",
-        )
-        .select("d", _bucket(F.col("__k"), F.col("d"), width).alias("bucket"), "__w")
-        .groupBy("d", "bucket")
-        .agg(F.sum("__w").alias("cnt"))
+        df.filter(f"{key} IS NOT NULL")
+        .selectExpr(f"{key} AS __k", f"{w} AS __w")
+        .selectExpr(f"explode(sequence(0, {depth - 1})) AS d", "__k", "__w")
+        .selectExpr("d", f"{_bucket('__k', 'd', width)} AS bucket", "__w AS cnt")
     )
+
+
+def _sum_counters(rows: DataFrame) -> DataFrame:
+    return rows.groupBy("d", "bucket").agg(F.expr("sum(cnt) AS cnt"))
 
 
 def cms_merge(*sketches: DataFrame) -> DataFrame:
@@ -90,7 +109,7 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
     out = sketches[0]
     for s in sketches[1:]:
         out = out.unionByName(s)
-    return out.groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))
+    return _sum_counters(out)
 
 
 def cms_estimate(
@@ -112,40 +131,52 @@ def cms_estimate(
     the keys side streams — probing N keys is one broadcast-join pass.
     """
     _check_params(depth, width)
-    probes = keys.select(
-        "*",
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("__d"),
-    ).select("*", _bucket(F.col(key_col), F.col("__d"), width).alias("__bucket"))
+    probes = keys.selectExpr(
+        "*", f"explode(sequence(0, {depth - 1})) AS __d"
+    ).selectExpr("*", f"{_bucket(_name(key_col), '__d', width)} AS __bucket")
     joined = probes.join(
         F.broadcast(sketch.withColumnRenamed("cnt", "__cnt")),
-        (F.col("__d") == F.col("d")) & (F.col("__bucket") == F.col("bucket")),
+        F.expr("__d = d AND __bucket = bucket"),
         "left",
     )
-    return (
-        joined.groupBy(*keys.columns)
-        .agg(F.min(F.coalesce(F.col("__cnt"), F.lit(0))).alias("est"))
-    )
+    return joined.groupBy(*keys.columns).agg(F.expr("min(coalesce(__cnt, 0)) AS est"))
 
 
 # ---------------------------------------------------------------------------
 # Persisted sketch: generation-committed state for build-once/probe-many
-# and streaming maintenance (same meta protocol as the ANN indexes —
-# operators/similarity.py signlsh_index_write: tables live under
-# {path}/gen=N/ and the 1-row meta overwrite is the ONLY commit point,
-# so a crashed write leaves readers at the previous consistent
-# generation).
+# and streaming maintenance. Each generation is one parquet file under
+# {path}/gen=N/; a commit record (io.write_commit, the protocol the ANN
+# indexes in operators/similarity.py share) names the live generation,
+# so a write or commit that fails leaves readers, and the next merge,
+# at the previous generation.
 # ---------------------------------------------------------------------------
 
 
 def cms_state_read(spark, path: str):
-    """The committed sketch at ``path`` as ``(sketch_df, meta_row)``,
-    or ``(None, None)`` if nothing is committed yet."""
-    from spotify_app_etl_spark.operators.similarity import _read_index_meta
-
-    meta = _read_index_meta(spark, path)
-    if meta is None:
+    """The committed sketch at ``path`` as ``(sketch_df, record)``, or
+    ``(None, None)`` if nothing is committed yet. Runs no Spark job:
+    the record is read on the driver and the generation is opened with
+    the sketch's declared schema."""
+    record = io.read_commit(spark, path)
+    if record is None:
         return None, None
-    return spark.read.parquet(f"{path}/gen={meta['gen']}"), meta
+    sketch = spark.read.schema(_SKETCH_SCHEMA).parquet(f"{path}/gen={record['gen']}")
+    return sketch, record
+
+
+def _merge_batch(
+    prev: DataFrame | None,
+    batch_df: DataFrame,
+    key_col: str,
+    depth: int,
+    width: int,
+    weight_col: str | None,
+) -> DataFrame:
+    """``cms_merge(prev, cms_build(batch_df, ...))`` with one aggregate:
+    the committed counters and the batch's increments are summed in the
+    same groupBy, one shuffle instead of two."""
+    rows = _increments(batch_df, key_col, depth, width, weight_col)
+    return _sum_counters(rows if prev is None else prev.unionByName(rows))
 
 
 def cms_ingest_batch(
@@ -157,42 +188,38 @@ def cms_ingest_batch(
     weight_col: str | None = None,
     batch_id: int | None = None,
 ) -> None:
-    """Merge one batch into the persisted sketch (counter-wise sum into
-    a NEW generation; the meta overwrite is the commit point).
+    """Merge one batch into the persisted sketch: counter-wise sum into
+    a NEW generation, written as one file (it holds at most depth*width
+    rows), then a commit record naming it.
 
     Retry-idempotent when ``batch_id`` is supplied (foreachBatch
-    semantics): the committed meta records the last merged batch, and a
-    re-delivered batch is skipped instead of double-counted. A crash
-    between the generation write and the meta flip leaves the committed
-    state untouched, so the retry recomputes the SAME merge from the
-    same previous generation — convergent, never cumulative.
+    semantics): the commit record holds the last merged batch, and a
+    re-delivered batch is skipped instead of double-counted. A failure
+    anywhere before the record is in place leaves the committed state
+    untouched, so the retry recomputes the SAME merge from the same
+    previous generation — convergent, never cumulative. An empty batch
+    commits a generation equal to the previous one.
 
-    depth/width are sketch identity: a mismatch against the stored meta
-    raises (bucket math from a different geometry would merge garbage).
+    depth/width are sketch identity: a mismatch against the committed
+    record raises (bucket math from a different geometry would merge
+    garbage).
     """
-    from spotify_app_etl_spark.operators.similarity import _meta_row
-
     _check_params(depth, width)
     spark = batch_df.sparkSession
-    prev, meta = cms_state_read(spark, path)
-    if meta is not None:
-        if meta["depth"] != depth or meta["width"] != width:
+    prev, record = cms_state_read(spark, path)
+    if record is not None:
+        if record["depth"] != depth or record["width"] != width:
             raise ValueError(
-                f"sketch at {path} is {meta['depth']}x{meta['width']}; "
+                f"sketch at {path} is {record['depth']}x{record['width']}; "
                 f"refusing to merge a {depth}x{width} batch into it"
             )
-        if batch_id is not None and meta.asDict().get("last_batch") == batch_id:
+        if batch_id is not None and record["last_batch"] == batch_id:
             return  # re-delivered batch: already committed, skip
-        gen = meta["gen"] + 1
+        gen = record["gen"] + 1
     else:
         gen = 1
-    sketch = cms_build(batch_df, key_col, depth=depth, width=width, weight_col=weight_col)
-    merged = sketch if prev is None else cms_merge(prev, sketch)
-    merged.write.mode("overwrite").parquet(f"{path}/gen={gen}")
-    _meta_row(
-        spark,
-        gen=gen,
-        depth=depth,
-        width=width,
-        last_batch=-1 if batch_id is None else batch_id,
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    merged = _merge_batch(prev, batch_df, key_col, depth, width, weight_col)
+    merged.coalesce(1).write.mode("overwrite").parquet(f"{path}/gen={gen}")
+    io.write_commit(
+        spark, path, gen=gen, depth=depth, width=width, last_batch=batch_id
+    )

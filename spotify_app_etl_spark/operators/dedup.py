@@ -1656,7 +1656,8 @@ def semantic_dedup_pairs(
     # guide §4): createDataFrame from local data routes the broadcast
     # build through Python-worker serialization at a measured
     # ~0.5 s-per-call warm (2.5 s cold) in this environment — the same
-    # finding behind similarity._meta_row and rank's offsets table.
+    # finding behind similarity.ivf_index_write's centroid table and
+    # rank's offsets table.
     # Fall back to createDataFrame only past the literal budget
     # (n_cells is capped at 50k; 2 ints per cell).
     spark_s = df.sparkSession

@@ -114,7 +114,7 @@ def _global_row_number_with_total(
     # JVM-side literal rows for the O(partitions) offsets table:
     # createDataFrame from local data routes the broadcast build
     # through Python-worker serialization at a seconds-per-call cost
-    # in this environment (same measurement as similarity._meta_row).
+    # (same measurement as similarity.ivf_index_write's centroid table).
     # Fall back to createDataFrame only past a literal budget no sane
     # num_ranges reaches.
     if not offsets:

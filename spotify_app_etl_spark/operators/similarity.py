@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from spotify_app_etl_spark import io
+
 
 def _as_double(arr: Column) -> Column:
     return arr.cast("array<double>")
@@ -536,32 +538,32 @@ def signlsh_index_write(
     computed ONCE per corpus vector (the Arrow matmul kernel), and two
     parquet tables persist as the index — ``buckets`` (corpus_id, tbl,
     bkt; the inverted file) and ``vectors`` (corpus_id, normalized
-    vector + norm; the scoring payload) — plus a 1-row ``meta`` table
-    pinning (planes, tables, seed) and the live GENERATION. Every
-    future query batch probes the stored buckets without touching raw
-    corpus embeddings again; ``mode='append'`` is the ingest path for
+    vector + norm; the scoring payload) — plus a commit record
+    (:func:`io.write_commit`) pinning (planes, tables, seed, dim) and
+    the live GENERATION. Every future query batch probes the stored
+    buckets without touching raw corpus embeddings again; ``mode='append'`` is the ingest path for
     new corpus batches (the hash family is deterministic per
     (seed, dim), so appended batches land in compatible buckets).
-    Appending with different params than the stored meta raises —
+    Appending with different params than the committed record raises —
     mixed-family buckets silently lose recall.
 
-    Commit protocol (both index families share it):
+    Commit protocol (shared by the sign-LSH, IVF and PQ indexes and
+    the persisted count-min sketch):
 
     * **Rebuild (overwrite) = new generation.** Tables are written
-      under ``{path}/gen=N/`` and the 1-row meta overwrite is the ONLY
-      commit point: a crash anywhere mid-rebuild leaves meta pointing
-      at the previous, fully-consistent generation — never at a mix of
-      new buckets and old vectors (or vice versa), which would be
-      searchable but silently wrong. A retried rebuild recomputes the
-      same N and overwrites the orphan. Residual window: the meta
-      overwrite itself (one tiny file; on a table format with atomic
-      commits this disappears).
+      under ``{path}/gen=N/``, then a commit record naming N is renamed
+      into place: a failure anywhere before that rename leaves the
+      latest record at the previous, fully-consistent generation —
+      never at a mix of new buckets and old vectors (or vice versa),
+      which would be searchable but silently wrong. A retried rebuild
+      recomputes the same N and overwrites the orphan.
     * **Append = into the CURRENT generation, vectors first, buckets
-      last.** A doc is only reachable through its bucket rows, so a
-      crash between the writes leaves orphan vector rows (storage
-      waste) rather than bucket rows pointing at nothing; a retry
-      re-appends both and the search-side candidate dedup absorbs the
-      duplicates. Meta is untouched, so params can't drift.
+      last, then a commit record of the same generation.** A doc is
+      only reachable through its bucket rows, so a crash between the
+      writes leaves orphan vector rows (storage waste) rather than
+      bucket rows pointing at nothing; a retry re-appends both and the
+      search-side candidate dedup absorbs the duplicates. The record
+      repeats the stored params, so they can't drift.
 
     NULL embeddings (and vectors holding NULL/NaN elements) are
     dropped at build: they have no direction to hash or score, and the
@@ -570,7 +572,7 @@ def signlsh_index_write(
     """
     _require_mode(mode)
     spark = corpus.sparkSession
-    meta = _read_index_meta(spark, path)
+    meta = io.read_commit(spark, path)
     dim = _first_vec_dim(corpus, vec)
     if mode == "append" and meta is not None:
         if (meta["planes"], meta["tables"], meta["seed"]) != (planes, tables, seed):
@@ -587,7 +589,7 @@ def signlsh_index_write(
         # degrading recall. The (planes, tables, seed) guard alone
         # cannot catch that.
         _check_index_dim(meta, dim, path, "append")
-        gen, fresh = meta["gen"], False
+        gen, fresh, dim = meta["gen"], False, meta["dim"] or dim
     else:
         # overwrite, or append-bootstrap onto a missing index
         gen, fresh = (meta["gen"] + 1 if meta is not None else 1), True
@@ -631,22 +633,16 @@ def signlsh_index_write(
         buckets.write.mode(wmode).parquet(f"{gdir}/buckets")
     finally:
         c0.unpersist()
-    if fresh:
-        # JVM-side literal row, NOT createDataFrame([...]): a local-data
-        # DataFrame routes the write through Python-worker serialization
-        # and costs seconds per call in this environment (measured 4.5 s
-        # vs 0.36 s for the equivalent range(1) projection) — absurd for
-        # the 1-row commit record of every rebuild.
-        _meta_row(
-            spark, planes=planes, tables=tables, seed=seed, gen=gen, dim=dim
-        ).write.mode("overwrite").parquet(f"{path}/meta")
+    io.write_commit(
+        spark, path, planes=planes, tables=tables, seed=seed, gen=gen, dim=dim
+    )
 
 
 def _first_vec_dim(df: DataFrame, vec: str) -> int:
     """Dimension of the first valid vector (0 if the frame has none) —
     one tiny action; index builds/appends already pay whole-corpus
-    passes, so this is noise, and it is what lets meta pin the hash
-    family's dim."""
+    passes, so this is noise, and it is what lets the commit record pin
+    the hash family's dim."""
     row = (
         df.filter(_valid_vec(F.col(vec)))
         .select(F.size(vec).alias("d"))
@@ -655,50 +651,17 @@ def _first_vec_dim(df: DataFrame, vec: str) -> int:
     return int(row["d"]) if row is not None else 0
 
 
-def _check_index_dim(meta, dim: int, path: str, action: str) -> None:
-    """Refuse a dim mismatch against the stored meta. Metas written
-    before dim was recorded (no 'dim' field) skip the check; dim=0
-    (empty frame) has nothing to mismatch."""
-    stored = meta.asDict().get("dim")
+def _check_index_dim(meta: dict, dim: int, path: str, action: str) -> None:
+    """Refuse a dim mismatch against the committed record. dim=0 (an
+    index built from, or a batch of, no valid vectors) has nothing to
+    mismatch."""
+    stored = meta["dim"]
     if stored and dim and stored != dim:
         raise ValueError(
             f"index at {path} stores {stored}-dim vectors; refusing to "
             f"{action} with {dim}-dim vectors (different hash family / "
             f"centroid space — a silent recall loss, not a compatible mix)"
         )
-
-
-def _meta_row(spark, **fields: int):
-    """1-row int-typed DataFrame built JVM-side (range + literals) —
-    the cheap way to write tiny commit records (see callers)."""
-    out = spark.range(1).select(
-        *[F.lit(int(v)).cast("int").alias(k) for k, v in fields.items()]
-    )
-    return out.coalesce(1)
-
-
-def _read_index_meta(spark, path: str):
-    """The index's 1-row meta, or None if the index doesn't exist yet.
-
-    Only a missing path maps to None; any OTHER failure (IO,
-    permissions, corrupt footer) propagates — swallowing it would skip
-    the param guard and then overwrite meta, silently mixing hash
-    families. Existence is pre-checked through the Hadoop FS API
-    because spark.read on a missing path logs a WARN + stack trace
-    (FileStreamSink's metadata probe) before raising — cold-start
-    builds would pollute every bench/driver log with scary-but-benign
-    FileNotFoundException traces.
-    """
-    from pyspark.errors import AnalysisException
-
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/meta")
-    hconf = spark._jsc.hadoopConfiguration()
-    if not jpath.getFileSystem(hconf).exists(jpath):
-        return None
-    try:
-        return spark.read.parquet(f"{path}/meta").first()
-    except AnalysisException:
-        return None
 
 
 def signlsh_index_search(
@@ -711,17 +674,17 @@ def signlsh_index_search(
 ) -> DataFrame:
     """Top-k ANN against a persisted sign-LSH index.
 
-    Hash params and the live generation come from the index's meta
-    table, so a query batch can never probe with a mismatched family or
-    read a half-committed rebuild. Plan shape matches the in-memory
-    :func:`cosine_topk_lsh`: broadcast the (small) probe set against
+    Hash params and the live generation come from the index's latest
+    commit record, so a query batch can never probe with a mismatched
+    family or read a half-committed rebuild. Plan shape matches the
+    in-memory :func:`cosine_topk_lsh`: broadcast the (small) probe set against
     the bucket table, dedup candidates, score against the stored
     normalized vectors, per-query top-k window. The corpus-side cost is
     ONE scan of the bucket/vector parquet — no re-hashing. Candidate
     dedup absorbs the duplicate rows a crashed-then-retried append
     leaves (identical scores, exact to drop).
     """
-    meta = _read_index_meta(spark, path)
+    meta = io.read_commit(spark, path)
     if meta is None:
         raise ValueError(f"no sign-LSH index at {path}")
     # query dim must match the stored hash family (plane matrix is
@@ -773,11 +736,11 @@ def ivf_index_write(
     the in-memory :func:`cosine_topk_ivf` must) is exactly what a
     production pipeline avoids. Stored tables: ``centroids`` (cell id +
     center vector), ``assigned`` (corpus_id, cell, normalized vector +
-    norm), under a GENERATION directory committed by the 1-row meta
-    overwrite — same protocol as :func:`signlsh_index_write`: a crash
-    mid-rebuild can never leave new centroids paired with old
-    assignments (cells ranked by one clustering, members fetched from
-    another — silently wrong neighbors); meta still points at the old,
+    norm), under a GENERATION directory named by a commit record —
+    same protocol as :func:`signlsh_index_write`: a crash mid-rebuild
+    can never leave new centroids paired with old assignments (cells
+    ranked by one clustering, members fetched from another — silently
+    wrong neighbors); the latest record still names the old,
     consistent generation. ``mode='append'`` assigns a NEW corpus batch
     to the CURRENT generation's centroids (no refit — cells drift only
     if the data distribution does; periodic full rebuild is the remedy,
@@ -795,7 +758,7 @@ def ivf_index_write(
     ).withColumn("__features", array_to_vector(F.col("v")))
     dim = _first_vec_dim(corpus, vec)
 
-    meta = _read_index_meta(spark, path)
+    meta = io.read_commit(spark, path)
     if mode == "append":
         if meta is None:
             raise ValueError(f"no IVF index at {path} to append to")
@@ -808,7 +771,7 @@ def ivf_index_write(
         # either crashes the distance kernel or assigns cells from
         # all-NULL distances — fail loudly instead
         _check_index_dim(meta, dim, path, "append")
-        gen = meta["gen"]
+        gen, dim = meta["gen"], meta["dim"] or dim
         gdir = f"{path}/gen={gen}"
         stored = spark.read.parquet(f"{gdir}/centroids").collect()
         centers = [list(r["center"]) for r in sorted(stored, key=lambda r: r["cell"])]
@@ -830,12 +793,13 @@ def ivf_index_write(
         ).fit(c_feat)
         centers = [[float(x) for x in c] for c in model.clusterCenters()]
         # Small centroid tables write as JVM-side literal rows:
-        # createDataFrame from local data pays a seconds-long
-        # Python-serialization penalty per build (see _meta_row). But
-        # the literal tree is n_cells × dim Catalyst nodes — at
-        # production shapes (4096 cells × 768 dims ≈ 3M literals)
-        # analysis/codegen itself blows up, so above a bounded literal
-        # budget the one-off serialization cost is the right trade.
+        # createDataFrame from a list of tuples runs a Python stage,
+        # measured at 4.5 s per build against 0.36 s for a range(1)
+        # projection of the same literals. But the literal tree is
+        # n_cells × dim Catalyst nodes — at production shapes (4096
+        # cells × 768 dims ≈ 3M literals) analysis/codegen itself blows
+        # up, so above a bounded literal budget the one-off
+        # serialization cost is the right trade.
         n_literals = len(centers) * (len(centers[0]) if centers else 0)
         if n_literals <= _LITERAL_BUDGET:
             cent_df = spark.range(1).select(
@@ -866,13 +830,9 @@ def ivf_index_write(
     ).write.mode("append" if mode == "append" else "overwrite").parquet(
         f"{gdir}/assigned"
     )
-    if mode != "append":
-        # the commit point: meta flips to the new generation only after
-        # BOTH tables exist and are internally consistent (JVM-side row:
-        # see _meta_row on why not createDataFrame)
-        _meta_row(spark, n_cells=n_cells, seed=seed, gen=gen, dim=dim).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/meta")
+    # the commit point: the record names the new generation only after
+    # BOTH tables exist and are internally consistent
+    io.write_commit(spark, path, n_cells=n_cells, seed=seed, gen=gen, dim=dim)
 
 
 def ivf_index_search(
@@ -890,10 +850,10 @@ def ivf_index_search(
     per query as a pure projection; only the ``n_probe`` nearest
     cells' stored members are scored. With ``n_probe == n_cells`` the
     search is exhaustive over the indexed corpus. The generation read
-    comes from meta, so a mid-rebuild crash can never serve mixed
-    centroid/assignment state.
+    comes from the latest commit record, so a mid-rebuild crash can
+    never serve mixed centroid/assignment state.
     """
-    meta = _read_index_meta(spark, path)
+    meta = io.read_commit(spark, path)
     if meta is None:
         raise ValueError(f"no IVF index at {path}")
     # mismatched query dim vs the stored centroid space is silent
@@ -1264,12 +1224,12 @@ def pq_index_write(
     shortlist stage reads m bytes/vector, not the embedding). Stored
     tables under a generation directory: ``codebooks`` (subspace,
     entry, center), ``codes`` (corpus_id, codes), ``vectors``
-    (corpus_id, v, norm — the re-rank side), committed by the 1-row
-    meta overwrite exactly like :func:`signlsh_index_write` /
-    :func:`ivf_index_write`: a crash mid-rebuild can never pair new
-    codebooks with old codes (codes are meaningless under the wrong
-    codebook — silently garbage ADC scores), because meta still points
-    at the old, internally-consistent generation.
+    (corpus_id, v, norm — the re-rank side), named by a commit record
+    exactly like :func:`signlsh_index_write` / :func:`ivf_index_write`:
+    a crash mid-rebuild can never pair new codebooks with old codes
+    (codes are meaningless under the wrong codebook — silently garbage
+    ADC scores), because the latest record still names the old,
+    internally-consistent generation.
 
     ``mode='append'`` encodes a NEW batch against the CURRENT
     generation's codebooks (no retrain — quantization drifts only if
@@ -1286,7 +1246,7 @@ def pq_index_write(
     )
     dim = _first_vec_dim(corpus, vec)
 
-    meta = _read_index_meta(spark, path)
+    meta = io.read_commit(spark, path)
     if mode == "append":
         if meta is None:
             raise ValueError(f"no PQ index at {path} to append to")
@@ -1297,7 +1257,7 @@ def pq_index_write(
                 f"meaningless across codebook shapes)"
             )
         _check_index_dim(meta, dim, path, "append")
-        gen = meta["gen"]
+        gen, dim = meta["gen"], meta["dim"] or dim
         gdir = f"{path}/gen={gen}"
         books = _read_codebooks(spark, gdir)
     else:
@@ -1373,10 +1333,7 @@ def pq_index_write(
     c1.select("corpus_id", encode(F.col("v")).alias("codes")).write.mode(
         wmode
     ).parquet(f"{gdir}/codes")
-    if mode != "append":
-        _meta_row(spark, m=m, ksub=ksub, seed=seed, gen=gen, dim=dim).write.mode(
-            "overwrite"
-        ).parquet(f"{path}/meta")
+    io.write_commit(spark, path, m=m, ksub=ksub, seed=seed, gen=gen, dim=dim)
 
 
 def _read_codebooks(spark, gdir: str):
@@ -1409,9 +1366,9 @@ def pq_index_search(
     stored code table, exact cosine re-rank against the stored raw
     vectors.
 
-    Codebook shape and the live generation come from meta, so a query
-    batch can never score codes under a mismatched codebook or read a
-    half-committed rebuild. Plan shape matches the in-memory
+    Codebook shape and the live generation come from the latest commit
+    record, so a query batch can never score codes under a mismatched
+    codebook or read a half-committed rebuild. Plan shape matches the in-memory
     :func:`cosine_topk_pq` — the corpus-side cost is ONE scan of the
     m-int code parquet (never a re-encode), plus the |queries|*refine
     vector fetch for the re-rank. With ``refine`` >= the indexed corpus
@@ -1420,7 +1377,7 @@ def pq_index_search(
     both in the shortlist (dropDuplicates pre-window) and in the
     re-rank (:func:`_score_topk` ``dedup=True``).
     """
-    meta = _read_index_meta(spark, path)
+    meta = io.read_commit(spark, path)
     if meta is None:
         raise ValueError(f"no PQ index at {path}")
     _check_index_dim(meta, _first_vec_dim(queries, vec), path, "search")

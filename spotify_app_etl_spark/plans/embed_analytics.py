@@ -289,7 +289,8 @@ def ns_embed_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # JVM-side literal rows, NOT createDataFrame(local): local-data
     # writes route through Python-worker serialization and cost seconds
-    # per call in this environment (see operators/similarity._meta_row).
+    # per call (measured: see the centroid table in
+    # operators/similarity.ivf_index_write).
     return (
         spark.range(1)
         .select(

@@ -467,15 +467,16 @@ def streaming_cms_ingest(
     State lives in the generation-committed sketch parquet, NOT the
     streaming state store: the stream restarts cold with full history,
     batch jobs probe the same sketch concurrently, and a re-delivered
-    micro-batch is skipped by the last_batch commit record instead of
-    double-counted — frequencies stay exactly
-    merge-of-batches == sketch-of-union under retries.
+    micro-batch is skipped by the last_batch field of the commit record
+    instead of double-counted — frequencies stay exactly
+    merge-of-batches == sketch-of-union under retries. An empty
+    micro-batch is merged like any other (a generation equal to the
+    previous one) rather than probed for rows first, which would cost
+    every batch one more Spark job.
     """
     from spotify_app_etl_spark.operators.cms import cms_ingest_batch
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         cms_ingest_batch(
             batch_df,
             sketch_path,

@@ -1,0 +1,153 @@
+"""Commit records (``io.write_commit`` / ``io.read_commit``): the one
+commit point of the persisted count-min sketch and the sign-LSH, IVF
+and PQ indexes."""
+
+from __future__ import annotations
+
+import os
+import random
+
+import pytest
+from pyspark.sql import functions as F
+
+from spotify_app_etl_spark import io
+from spotify_app_etl_spark.operators import similarity as SM
+from spotify_app_etl_spark.operators.cms import (
+    _SKETCH_SCHEMA,
+    _merge_batch,
+    cms_ingest_batch,
+    cms_state_read,
+)
+
+
+def _fail_publish(fs, tmp, final):
+    raise OSError("injected commit failure")
+
+
+def _keys(spark):
+    return spark.createDataFrame([("a",), ("b",), ("c",)], "tok string")
+
+
+def _row0_total(spark, path) -> int:
+    sketch, _ = cms_state_read(spark, path)
+    return sketch.filter("d = 0").agg(F.sum("cnt")).first()[0]
+
+
+def test_records_are_numbered_and_the_latest_wins(spark, tmp_path):
+    path = str(tmp_path / "s")
+    assert io.read_commit(spark, path) is None
+    assert io.write_commit(spark, path, gen=1, last_batch=None) == 1
+    assert io.write_commit(spark, path, gen=1, last_batch=7) == 2
+    assert io.read_commit(spark, path) == {"gen": 1, "last_batch": 7}
+    visible = sorted(
+        n for n in os.listdir(tmp_path / "s" / "_commits") if not n.startswith(".")
+    )
+    assert visible == [f"{1:020d}.json", f"{2:020d}.json"]
+
+
+def test_a_stray_temporary_is_not_a_commit(spark, tmp_path):
+    path = str(tmp_path / "s")
+    io.write_commit(spark, path, gen=1)
+    # what a writer that died before its rename leaves behind
+    (tmp_path / "s" / "_commits" / f"_{2:020d}.dead.tmp").write_text("{")
+    assert io.read_commit(spark, path) == {"gen": 1}
+    assert io.write_commit(spark, path, gen=2) == 2
+    assert io.read_commit(spark, path) == {"gen": 2}
+
+
+def test_an_unreadable_record_raises_instead_of_reading_as_none(spark, tmp_path):
+    path = str(tmp_path / "s")
+    io.write_commit(spark, path, gen=1)
+    cdir = tmp_path / "s" / "_commits"
+    for crc in cdir.glob(".*.crc"):
+        crc.unlink()
+    (cdir / f"{1:020d}.json").write_text('{"gen": ')
+    with pytest.raises(ValueError):
+        io.read_commit(spark, path)
+
+
+def test_cms_commit_failure_keeps_previous_generation(spark, tmp_path, monkeypatch):
+    """A batch whose commit fails after its generation and temporary
+    record are written leaves the previous generation live, and its
+    retry merges onto it: three batches of three keys sum to 9."""
+    path = str(tmp_path / "cms")
+    keys = _keys(spark)
+    cms_ingest_batch(keys, path, "tok", depth=2, width=64, batch_id=0)
+    cms_ingest_batch(keys, path, "tok", depth=2, width=64, batch_id=1)
+    with monkeypatch.context() as m:
+        m.setattr(io, "_publish", _fail_publish)
+        with pytest.raises(OSError, match="injected"):
+            cms_ingest_batch(keys, path, "tok", depth=2, width=64, batch_id=2)
+    _, record = cms_state_read(spark, path)
+    assert (record["gen"], record["last_batch"]) == (2, 1)
+    assert _row0_total(spark, path) == 6
+    cms_ingest_batch(keys, path, "tok", depth=2, width=64, batch_id=2)
+    assert _row0_total(spark, path) == 9
+
+
+def test_index_commit_failure_keeps_previous_generation(spark, tmp_path, monkeypatch):
+    """A sign-LSH rebuild whose commit fails leaves searches on the
+    previous generation, and a later append builds on that generation."""
+    rng = random.Random(5)
+
+    def corpus(ids):
+        return spark.createDataFrame(
+            [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in ids],
+            "corpus_id long, embedding array<double>",
+        )
+
+    def self_hits(df):
+        queries = df.select(F.col("corpus_id").alias("query_id"), "embedding")
+        top = SM.signlsh_index_search(spark, queries, path, k=1)
+        return sorted((r.query_id, r.corpus_id) for r in top.collect())
+
+    path = str(tmp_path / "lsh")
+    first = corpus(range(40))
+    SM.signlsh_index_write(first, path)
+    before = self_hits(first)
+    assert before == [(i, i) for i in range(40)]
+    with monkeypatch.context() as m:
+        m.setattr(io, "_publish", _fail_publish)
+        with pytest.raises(OSError, match="injected"):
+            SM.signlsh_index_write(corpus(range(100, 140)), path)
+    assert io.read_commit(spark, path)["gen"] == 1
+    assert self_hits(first) == before
+    extra = corpus(range(200, 210))
+    SM.signlsh_index_write(extra, path, mode="append")
+    assert io.read_commit(spark, path)["gen"] == 1
+    assert self_hits(first) == before
+    assert self_hits(extra) == [(i, i) for i in range(200, 210)]
+
+
+def _jobs(spark, group, fn) -> int:
+    """Spark jobs ``fn`` runs on this thread, counted through its job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cms_state_read_runs_no_job_and_ingest_only_its_write(spark, tmp_path):
+    path = str(tmp_path / "cms")
+    keys = _keys(spark)
+    cms_ingest_batch(keys, path, "tok", depth=2, width=64, batch_id=0)
+    assert _jobs(spark, "test-cms-read", lambda: cms_state_read(spark, path)) == 0
+
+    def write_alone():
+        prev = spark.read.schema(_SKETCH_SCHEMA).parquet(f"{path}/gen=1")
+        merged = _merge_batch(prev, keys, "tok", 2, 64, None)
+        merged.coalesce(1).write.parquet(str(tmp_path / "alone"))
+
+    write = _jobs(spark, "test-cms-write", write_alone)
+    ingest = _jobs(
+        spark,
+        "test-cms-ingest",
+        lambda: cms_ingest_batch(keys, path, "tok", depth=2, width=64, batch_id=1),
+    )
+    assert write > 0
+    assert ingest == write

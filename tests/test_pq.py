@@ -207,14 +207,17 @@ def test_pq_index_param_guards(spark, emb, tmp_path):
 
 
 def test_pq_index_rebuild_bumps_generation(spark, emb, tmp_path):
-    """A full rebuild writes a NEW generation and flips meta last — the
-    crash-consistency protocol shared with the sign-LSH/IVF indexes."""
+    """A full rebuild writes a NEW generation and commits its record
+    last — the crash-consistency protocol shared with the sign-LSH/IVF
+    indexes and the persisted CMS."""
+    from spotify_app_etl_spark import io
+
     q, c = _qc(emb)
     idx = str(tmp_path / "pq")
     SIM.pq_index_write(c, idx, m=8, ksub=16)
-    m1 = SIM._read_index_meta(spark, idx)
+    m1 = io.read_commit(spark, idx)
     SIM.pq_index_write(c, idx, m=8, ksub=16)
-    m2 = SIM._read_index_meta(spark, idx)
+    m2 = io.read_commit(spark, idx)
     assert (m1["gen"], m2["gen"]) == (1, 2)
     out = SIM.pq_index_search(spark, q, idx, k=5, refine=64)
     assert out.count() == 50
