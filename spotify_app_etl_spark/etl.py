@@ -56,11 +56,10 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from spotify_app_etl_spark import schemas
+from spotify_app_etl_spark import io, schemas
 from spotify_app_etl_spark.sources import rest
 from spotify_app_etl_spark.sources.spotify_mock import MockSpotifyTransport
 
@@ -81,14 +80,11 @@ ENDPOINTS: dict[str, tuple[str, int]] = {
 
 
 def _json_df(spark: SparkSession, items: list[dict]) -> DataFrame:
-    """``items`` as a one-column ``payload string`` table of JSON.
-
-    Built from a pyarrow table so it plans as a ``LocalRelation``, even
-    when empty: a list of tuples plans as an RDD scan, which runs a
-    Python stage, and an empty pandas frame falls back to one.
-    """
-    strings = pa.array([json.dumps(item) for item in items], pa.string())
-    return spark.createDataFrame(pa.table({"payload": strings}))
+    """``items`` as a one-column ``payload string`` table of JSON, a
+    ``LocalRelation`` (:func:`io.local_table`)."""
+    return io.local_table(
+        spark, {"payload": [json.dumps(item) for item in items]}, "payload string"
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -15,11 +15,17 @@ mirrors the reference's load stage (spotify-etl.py:209-215,
 compatibility mode replacing the reference's ``df.astype(str)`` type
 erasure (spotify-etl.py:211; SURVEY.md §1.4).
 
+Driver-held tables: :func:`local_table`, the one way values held on the
+driver (centroids, codebooks, offsets, a merge list, a JSON page)
+become a table.
+
 Commit records: :func:`write_commit` and :func:`read_commit`, the one
 commit point of the persisted count-min sketch and the sign-LSH, IVF
 and PQ indexes. Each commit is a numbered JSON file under
 ``{path}/_commits/``, written by the driver under a temporary name and
-renamed into place; the latest record names the live generation.
+renamed into place; the latest record names the live generation, whose
+directory :func:`generation_dir` names. A commit deletes the
+generations and records it supersedes, keeping the previous one.
 
 Scale notes: loads are plain ``spark.read.parquet`` scans — Catalyst
 handles predicate pushdown / column pruning / partition pruning, so at
@@ -35,8 +41,10 @@ import os
 import re
 import uuid
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from spotify_app_etl_spark import schemas
 
@@ -134,6 +142,35 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
 
 
 # ---------------------------------------------------------------------------
+# Driver-held tables
+# ---------------------------------------------------------------------------
+
+
+def local_table(spark: SparkSession, columns: dict[str, list], schema: str) -> DataFrame:
+    """``columns`` (column name -> its list of values, one entry per
+    column of ``schema``) as a table of ``schema``.
+
+    The values reach the JVM as one Arrow table, so the result plans as
+    a ``LocalRelation`` at any size, empty included. No Python worker
+    runs, unlike a list of tuples, which plans as an RDD scan with a
+    Python stage. No literal expression per value reaches Catalyst,
+    unlike a ``spark.range(1)`` explode of literal structs, whose
+    analysis time grows with its literal count.
+
+    ``schema`` is a DDL string such as ``"cell int not null, center
+    array<double>"``. It fixes each column's type and nullability; a
+    value that does not fit its column's type, or a NULL in a ``not
+    null`` column, raises.
+    """
+    struct = T.StructType.fromDDL(schema)
+    table = pa.table(columns, schema=to_arrow_schema(struct))
+    for field in struct.fields:
+        if not field.nullable and table.column(field.name).null_count:
+            raise ValueError(f"local_table: NULL in not-null column {field.name!r}")
+    return spark.createDataFrame(table, struct)
+
+
+# ---------------------------------------------------------------------------
 # Writers
 # ---------------------------------------------------------------------------
 
@@ -159,10 +196,18 @@ def stringify(df: DataFrame) -> DataFrame:
 #: else there (a temporary name, a checksum file) is not a commit.
 _COMMIT_NAME = re.compile(r"(\d{20})\.json")
 
+#: A generation directory's name under ``{path}``.
+_GEN_NAME = re.compile(r"gen=(\d+)")
 
-def write_commit(spark: SparkSession, path: str, **record: int | None) -> int:
-    """Commit ``record`` as the next commit record of ``path``; returns
-    its number.
+
+def generation_dir(path: str, gen: int) -> str:
+    """Where generation ``gen`` of the sketch or index at ``path`` lives."""
+    return f"{path.rstrip('/')}/gen={gen}"
+
+
+def write_commit(spark: SparkSession, path: str, gen: int, **record: int | None) -> int:
+    """Commit ``record`` naming generation ``gen`` as the next commit
+    record of ``path``; returns its number.
 
     The record is a small JSON file written by the driver through the
     Hadoop ``FileSystem`` API, so committing runs no Spark job and works
@@ -173,17 +218,31 @@ def write_commit(spark: SparkSession, path: str, **record: int | None) -> int:
     at any point leaves the previous record the latest. One writer per
     ``path`` at a time; a second writer that races to the same number
     fails loudly instead of replacing the first one's record.
+
+    Once the record is in place, what it supersedes is deleted: every
+    generation directory below ``gen - 1`` and every record but the
+    last two. Generation ``gen - 1`` stays for a reader that opened it
+    before this commit, so a path holds at most two generations; a
+    commit that names ``gen`` again (an append) deletes no generation.
     """
     hpath = spark._jvm.org.apache.hadoop.fs.Path
     fs, cdir = _commit_dir(spark, path)
-    seq = _last_seq(fs, cdir) + 1
+    seqs = _record_seqs(fs, cdir)
+    seq = max(seqs, default=0) + 1
     tmp = hpath(cdir, f"_{seq:020d}.{uuid.uuid4().hex}.tmp")
     out = fs.create(tmp, False)
     try:
-        out.write(json.dumps(record, sort_keys=True).encode())
+        out.write(json.dumps({"gen": gen, **record}, sort_keys=True).encode())
     finally:
         out.close()
     _publish(fs, tmp, hpath(cdir, f"{seq:020d}.json"))
+    for old in seqs:
+        if old < seq - 1:
+            fs.delete(hpath(cdir, f"{old:020d}.json"), False)
+    for status in fs.listStatus(cdir.getParent()):
+        m = _GEN_NAME.fullmatch(status.getPath().getName())
+        if m and int(m[1]) < gen - 1:
+            fs.delete(status.getPath(), True)
     return seq
 
 
@@ -211,7 +270,7 @@ def read_commit(spark: SparkSession, path: str) -> dict | None:
     generation 1 and silently drop what was committed.
     """
     fs, cdir = _commit_dir(spark, path)
-    seq = _last_seq(fs, cdir)
+    seq = max(_record_seqs(fs, cdir), default=0)
     if seq == 0:
         return None
     stream = fs.open(spark._jvm.org.apache.hadoop.fs.Path(cdir, f"{seq:020d}.json"))
@@ -228,17 +287,15 @@ def _commit_dir(spark: SparkSession, path: str):
     return cdir.getFileSystem(spark._jsc.hadoopConfiguration()), cdir
 
 
-def _last_seq(fs, cdir) -> int:
-    """The highest record number in ``cdir``, 0 when it holds none.
+def _record_seqs(fs, cdir) -> list[int]:
+    """The record numbers in ``cdir``, none when it does not exist.
 
-    One driver-side listing, with one entry per commit made.
+    One driver-side listing; retention keeps it at two entries.
     """
     if not fs.exists(cdir):
-        return 0
+        return []
     names = (status.getPath().getName() for status in fs.listStatus(cdir))
-    return max(
-        (int(m[1]) for m in map(_COMMIT_NAME.fullmatch, names) if m), default=0
-    )
+    return [int(m[1]) for m in map(_COMMIT_NAME.fullmatch, names) if m]
 
 
 def write_parquet(

@@ -29,6 +29,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from spotify_app_etl_spark import io
 from spotify_app_etl_spark.functions.text import tokens
 
 
@@ -189,36 +190,15 @@ def bpe_save(spark, merges: list[tuple[str, str]], path: str) -> None:
     torn listing is unreadable, not silently reordered)."""
     if not merges:
         raise ValueError("bpe_save: empty merge list")
-    # JVM-side literal rows below the budget (r11, guide §4):
-    # createDataFrame from local data routes through Python-worker
-    # serialization at a measured ~0.5 s-per-call warm in this
-    # environment (same finding as similarity.ivf_index_write's
-    # centroid table); the merge
-    # list is vocab-capped, so the literal path is the common case.
-    if 3 * len(merges) <= 100_000:
-        df = (
-            spark.range(1)
-            .select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(i).cast("int").alias("rank"),
-                                F.lit(a).alias("left"),
-                                F.lit(b).alias("right"),
-                            )
-                            for i, (a, b) in enumerate(merges)
-                        ]
-                    )
-                ).alias("s")
-            )
-            .select("s.rank", "s.left", "s.right")
-        )
-    else:
-        df = spark.createDataFrame(
-            [(i, a, b) for i, (a, b) in enumerate(merges)],
-            "rank int, left string, right string",
-        )
+    df = io.local_table(
+        spark,
+        {
+            "rank": list(range(len(merges))),
+            "left": [a for a, _ in merges],
+            "right": [b for _, b in merges],
+        },
+        "rank int not null, left string not null, right string not null",
+    )
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
 

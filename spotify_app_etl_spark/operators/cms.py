@@ -148,7 +148,8 @@ def cms_estimate(
 # {path}/gen=N/; a commit record (io.write_commit, the protocol the ANN
 # indexes in operators/similarity.py share) names the live generation,
 # so a write or commit that fails leaves readers, and the next merge,
-# at the previous generation.
+# at the previous generation. Each commit deletes the generations
+# before the previous one, so the path holds at most two.
 # ---------------------------------------------------------------------------
 
 
@@ -160,7 +161,9 @@ def cms_state_read(spark, path: str):
     record = io.read_commit(spark, path)
     if record is None:
         return None, None
-    sketch = spark.read.schema(_SKETCH_SCHEMA).parquet(f"{path}/gen={record['gen']}")
+    sketch = spark.read.schema(_SKETCH_SCHEMA).parquet(
+        io.generation_dir(path, record["gen"])
+    )
     return sketch, record
 
 
@@ -219,7 +222,7 @@ def cms_ingest_batch(
     else:
         gen = 1
     merged = _merge_batch(prev, batch_df, key_col, depth, width, weight_col)
-    merged.coalesce(1).write.mode("overwrite").parquet(f"{path}/gen={gen}")
+    merged.coalesce(1).write.mode("overwrite").parquet(io.generation_dir(path, gen))
     io.write_commit(
         spark, path, gen=gen, depth=depth, width=width, last_batch=batch_id
     )

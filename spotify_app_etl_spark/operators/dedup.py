@@ -27,6 +27,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from spotify_app_etl_spark import io
 from spotify_app_etl_spark.operators.checkpoint import local_checkpoint_ser
 from spotify_app_etl_spark.operators.persist import scoped_persist
 
@@ -1652,44 +1653,11 @@ def semantic_dedup_pairs(
         c: max(1, min(256, math.ceil(n / max_cell_rows))) for c, n in cell_counts.items()
     }
     tasks = sum(b * (b + 1) // 2 for b in nblocks.values())
-    # JVM-side literal rows for the O(n_cells) block-count table (r11,
-    # guide §4): createDataFrame from local data routes the broadcast
-    # build through Python-worker serialization at a measured
-    # ~0.5 s-per-call warm (2.5 s cold) in this environment — the same
-    # finding behind similarity.ivf_index_write's centroid table and
-    # rank's offsets table.
-    # Fall back to createDataFrame only past the literal budget
-    # (n_cells is capped at 50k; 2 ints per cell).
-    spark_s = df.sparkSession
-    if nblocks and 2 * len(nblocks) <= 100_000:
-        blocks_local = (
-            spark_s.range(1)
-            .select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(int(c)).cast("int").alias("__cell"),
-                                F.lit(int(b)).cast("int").alias("__nb"),
-                            )
-                            for c, b in nblocks.items()
-                        ]
-                    )
-                ).alias("s")
-            )
-            .select("s.__cell", "s.__nb")
-        )
-    elif not nblocks:
-        # empty corpus: a zero-struct literal array types as VOID and
-        # breaks analysis — build the empty frame from the schema only
-        blocks_local = spark_s.range(0).select(
-            F.lit(0).cast("int").alias("__cell"),
-            F.lit(0).cast("int").alias("__nb"),
-        )
-    else:
-        blocks_local = spark_s.createDataFrame(
-            [(c, b) for c, b in nblocks.items()], "__cell int, __nb int"
-        )
+    blocks_local = io.local_table(
+        df.sparkSession,
+        {"__cell": list(nblocks), "__nb": list(nblocks.values())},
+        "__cell int not null, __nb int not null",
+    )
     blocks_df = F.broadcast(blocks_local)
     packed = (
         assigned.join(blocks_df, "__cell")

@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from spotify_app_etl_spark import io
+
 
 def global_row_number(
     df: DataFrame,
@@ -110,42 +112,11 @@ def _global_row_number_with_total(
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    spark = df.sparkSession
-    # JVM-side literal rows for the O(partitions) offsets table:
-    # createDataFrame from local data routes the broadcast build
-    # through Python-worker serialization at a seconds-per-call cost
-    # (same measurement as similarity.ivf_index_write's centroid table).
-    # Fall back to createDataFrame only past a literal budget no sane
-    # num_ranges reaches.
-    if not offsets:
-        # empty input: a zero-struct literal array types as VOID and
-        # breaks analysis — build the empty frame with the schema only
-        off_df = spark.range(0).select(
-            F.lit(0).cast("int").alias("__pid"),
-            F.lit(0).cast("long").alias("__off"),
-        )
-    elif len(offsets) <= 10_000:
-        off_df = (
-            spark.range(1)
-            .select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(int(pid)).cast("int").alias("__pid"),
-                                F.lit(int(off)).cast("long").alias("__off"),
-                            )
-                            for pid, off in offsets.items()
-                        ]
-                    )
-                ).alias("s")
-            )
-            .select("s.__pid", "s.__off")
-        )
-    else:
-        off_df = spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], "__pid int, __off long"
-        )
+    off_df = io.local_table(
+        df.sparkSession,
+        {"__pid": list(offsets), "__off": list(offsets.values())},
+        "__pid int not null, __off long not null",
+    )
     ranked = (
         local.join(F.broadcast(off_df), "__pid")
         .withColumn(out, (F.col("__off") + F.col("__lrn")).cast("long"))

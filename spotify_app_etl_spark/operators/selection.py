@@ -220,8 +220,8 @@ def classifier_scores(
         raise ValueError(f"n_features must be > 1, got {n_features}")
     if n_features > 65536:
         # the coefficient vector rides the plan as a literal array —
-        # the same bounded-literal trade as the IVF centroid tables
-        # (operators/similarity.py _LITERAL_BUDGET); beyond this,
+        # the same bounded-literal trade as the IVF cell ranking
+        # (operators/similarity.py _cell_rank, _LITERAL_BUDGET); beyond this,
         # switch to a (bucket, coef) broadcast-join scoring path
         raise ValueError(
             f"n_features {n_features} exceeds the literal-array scoring "

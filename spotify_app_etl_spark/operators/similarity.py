@@ -190,9 +190,9 @@ def _cell_rank(centers: list[list[float]], v: Column, k: int | None = None) -> C
     return F.when(v.isNotNull(), ranked)
 
 
-#: Max Catalyst literal nodes we are willing to inline for centroid
-#: math (n_cells × dim). Above this, analysis/codegen time dominates
-#: and the Arrow kernel / createDataFrame paths take over.
+#: Max centroid literals (n_cells × dim) :func:`_cell_rank` inlines
+#: into its per-row expression. Above this, analysis/codegen time
+#: dominates and its Arrow kernel takes over.
 _LITERAL_BUDGET = 50_000
 
 
@@ -564,6 +564,9 @@ def signlsh_index_write(
       bucket rows pointing at nothing; a retry re-appends both and the
       search-side candidate dedup absorbs the duplicates. The record
       repeats the stored params, so they can't drift.
+    * **Retention.** Each commit deletes the generations before the
+      previous one and all but the last two records
+      (:func:`io.write_commit`).
 
     NULL embeddings (and vectors holding NULL/NaN elements) are
     dropped at build: they have no direction to hash or score, and the
@@ -593,7 +596,7 @@ def signlsh_index_write(
     else:
         # overwrite, or append-bootstrap onto a missing index
         gen, fresh = (meta["gen"] + 1 if meta is not None else 1), True
-    gdir = f"{path}/gen={gen}"
+    gdir = io.generation_dir(path, gen)
     bks = _hyperplane_buckets_arrow(tables, planes, seed)
     from pyspark.storagelevel import StorageLevel
 
@@ -692,7 +695,7 @@ def signlsh_index_search(
     # but semantically-unrelated buckets — silent garbage, not an error
     _check_index_dim(meta, _first_vec_dim(queries, vec), path, "search")
     planes, tables, seed = meta["planes"], meta["tables"], meta["seed"]
-    gdir = f"{path}/gen={meta['gen']}"
+    gdir = io.generation_dir(path, meta["gen"])
     buckets = spark.read.parquet(f"{gdir}/buckets")
     vectors = spark.read.parquet(f"{gdir}/vectors")
 
@@ -772,7 +775,7 @@ def ivf_index_write(
         # all-NULL distances — fail loudly instead
         _check_index_dim(meta, dim, path, "append")
         gen, dim = meta["gen"], meta["dim"] or dim
-        gdir = f"{path}/gen={gen}"
+        gdir = io.generation_dir(path, gen)
         stored = spark.read.parquet(f"{gdir}/centroids").collect()
         centers = [list(r["center"]) for r in sorted(stored, key=lambda r: r["cell"])]
 
@@ -787,39 +790,16 @@ def ivf_index_write(
         )
     else:
         gen = meta["gen"] + 1 if meta is not None else 1
-        gdir = f"{path}/gen={gen}"
+        gdir = io.generation_dir(path, gen)
         model = KMeans(
             k=n_cells, seed=seed, maxIter=8, featuresCol="__features"
         ).fit(c_feat)
         centers = [[float(x) for x in c] for c in model.clusterCenters()]
-        # Small centroid tables write as JVM-side literal rows:
-        # createDataFrame from a list of tuples runs a Python stage,
-        # measured at 4.5 s per build against 0.36 s for a range(1)
-        # projection of the same literals. But the literal tree is
-        # n_cells × dim Catalyst nodes — at production shapes (4096
-        # cells × 768 dims ≈ 3M literals) analysis/codegen itself blows
-        # up, so above a bounded literal budget the one-off
-        # serialization cost is the right trade.
-        n_literals = len(centers) * (len(centers[0]) if centers else 0)
-        if n_literals <= _LITERAL_BUDGET:
-            cent_df = spark.range(1).select(
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(i).cast("int").alias("cell"),
-                                F.array(*[F.lit(x) for x in c]).alias("center"),
-                            )
-                            for i, c in enumerate(centers)
-                        ]
-                    )
-                ).alias("s")
-            ).select("s.cell", "s.center")
-        else:
-            cent_df = spark.createDataFrame(
-                [(i, c) for i, c in enumerate(centers)],
-                "cell int, center array<double>",
-            )
+        cent_df = io.local_table(
+            spark,
+            {"cell": list(range(len(centers))), "center": centers},
+            "cell int not null, center array<double> not null",
+        )
         cent_df.coalesce(1).write.mode("overwrite").parquet(f"{gdir}/centroids")
         assigned = model.transform(c_feat).select(
             "corpus_id", "v", F.col("prediction").cast("int").alias("cell")
@@ -859,7 +839,7 @@ def ivf_index_search(
     # mismatched query dim vs the stored centroid space is silent
     # garbage (or a kernel crash), never a compatible probe
     _check_index_dim(meta, _first_vec_dim(queries, vec), path, "search")
-    gdir = f"{path}/gen={meta['gen']}"
+    gdir = io.generation_dir(path, meta["gen"])
     stored = spark.read.parquet(f"{gdir}/centroids").collect()
     centers = {r["cell"]: list(r["center"]) for r in stored}
     assigned = spark.read.parquet(f"{gdir}/assigned")
@@ -1258,11 +1238,11 @@ def pq_index_write(
             )
         _check_index_dim(meta, dim, path, "append")
         gen, dim = meta["gen"], meta["dim"] or dim
-        gdir = f"{path}/gen={gen}"
+        gdir = io.generation_dir(path, gen)
         books = _read_codebooks(spark, gdir)
     else:
         gen = meta["gen"] + 1 if meta is not None else 1
-        gdir = f"{path}/gen={gen}"
+        gdir = io.generation_dir(path, gen)
         if books is None:
             books = pq_train(
                 corpus,
@@ -1280,43 +1260,15 @@ def pq_index_write(
                     f"pre-trained books shape {books.shape} does not match "
                     f"m={m}, ksub={ksub}"
                 )
-        dsub = books.shape[2]
-        # Same small-table trade as the IVF centroids: JVM-side literal
-        # rows below _LITERAL_BUDGET (createDataFrame pays a per-call
-        # Python-serialization penalty), createDataFrame above it
-        # (production 768-dim x ksub=256 codebooks are ~200k literals —
-        # past what Catalyst analysis should chew per build).
-        if m * ksub * dsub <= _LITERAL_BUDGET:
-            cb_df = (
-                spark.range(1)
-                .select(
-                    F.explode(
-                        F.array(
-                            *[
-                                F.struct(
-                                    F.lit(j).cast("int").alias("subspace"),
-                                    F.lit(r).cast("int").alias("entry"),
-                                    F.array(
-                                        *[F.lit(float(x)) for x in books[j][r]]
-                                    ).alias("center"),
-                                )
-                                for j in range(m)
-                                for r in range(ksub)
-                            ]
-                        )
-                    ).alias("s")
-                )
-                .select("s.subspace", "s.entry", "s.center")
-            )
-        else:
-            cb_df = spark.createDataFrame(
-                [
-                    (j, r, [float(x) for x in books[j][r]])
-                    for j in range(m)
-                    for r in range(ksub)
-                ],
-                "subspace int, entry int, center array<double>",
-            )
+        cb_df = io.local_table(
+            spark,
+            {
+                "subspace": [j for j in range(m) for _ in range(ksub)],
+                "entry": [r for _ in range(m) for r in range(ksub)],
+                "center": books.reshape(m * ksub, -1).tolist(),
+            },
+            "subspace int not null, entry int not null, center array<double> not null",
+        )
         cb_df.coalesce(1).write.mode("overwrite").parquet(f"{gdir}/codebooks")
 
     encode = _pq_encode_arrow(books)
@@ -1382,7 +1334,7 @@ def pq_index_search(
         raise ValueError(f"no PQ index at {path}")
     _check_index_dim(meta, _first_vec_dim(queries, vec), path, "search")
     ksub = meta["ksub"]
-    gdir = f"{path}/gen={meta['gen']}"
+    gdir = io.generation_dir(path, meta["gen"])
     books = _read_codebooks(spark, gdir)
     codes = spark.read.parquet(f"{gdir}/codes")
     vectors = spark.read.parquet(f"{gdir}/vectors")

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from spotify_app_etl_spark.io import local_table
 from spotify_app_etl_spark.plans.common import t
 from spotify_app_etl_spark.plans.northstar import _EMB_PLANTED_SQL
 from spotify_app_etl_spark.registry import query
@@ -287,31 +288,16 @@ def ns_embed_top_eigvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone = all(
         b >= a * (1.0 - 1e-9) for a, b in zip(eigvals, eigvals[1:])
     )
-    # JVM-side literal rows, NOT createDataFrame(local): local-data
-    # writes route through Python-worker serialization and cost seconds
-    # per call (measured: see the centroid table in
-    # operators/similarity.ivf_index_write).
-    return (
-        spark.range(1)
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i + 1).cast("int").alias("pos"),
-                            F.lit(round(float(c), 8)).alias("loading"),
-                        )
-                        for i, c in enumerate(v)
-                    ]
-                )
-            ).alias("s")
-        )
-        .select(
-            "s.pos",
-            "s.loading",
-            F.lit(round(float(eigvals[-1]), 5)).alias("eigenvalue"),
-            F.lit(bool(monotone)).alias("rayleigh_monotone_ok"),
-        )
+    return local_table(
+        spark,
+        {
+            "pos": list(range(1, len(v) + 1)),
+            "loading": [round(float(c), 8) for c in v],
+            "eigenvalue": [round(float(eigvals[-1]), 5)] * len(v),
+            "rayleigh_monotone_ok": [bool(monotone)] * len(v),
+        },
+        "pos int not null, loading double not null, "
+        "eigenvalue double not null, rayleigh_monotone_ok boolean not null",
     )
 
 

@@ -302,7 +302,7 @@ def q_join_salted_hotkey(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ns_layout_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
-    from spotify_app_etl_spark.io import compact_partitioned
+    from spotify_app_etl_spark.io import compact_partitioned, local_table
 
     # applicationId-scoped like every other scratch path here:
     # concurrent sessions (parallel pytest, bench beside the driver)
@@ -334,19 +334,11 @@ def ns_layout_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_partitions=100,
         min_files_to_compact=2,
     )
-    before_df = spark.range(1).select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("event_type"),
-                        F.lit(int(v)).cast("long").alias("files_before"),
-                    )
-                    for k, v in sorted(before.items())
-                ]
-            )
-        ).alias("s")
-    ).select("s.event_type", "s.files_before")
+    before_df = local_table(
+        spark,
+        {"event_type": list(before), "files_before": list(before.values())},
+        "event_type string not null, files_before long not null",
+    )
     after = (
         spark.read.parquet(base)
         .select("event_type", F.input_file_name().alias("__f"))

@@ -7,7 +7,7 @@ dict-comprehension keys (spotify-etl.py:76-84, :100-106, :121-127,
 typed schema per table, so schema drift fails loudly instead of
 silently changing output (SURVEY.md §1.3-1.4). Section A is the read
 schema of every testdata load (``io.load_table``); sections B and C
-type the ETL's ``from_json`` flatten and ``createDataFrame`` calls.
+type the ETL's tables and the JSON payloads its ``from_json`` flattens.
 """
 
 from __future__ import annotations

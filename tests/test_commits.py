@@ -4,17 +4,20 @@ and PQ indexes."""
 
 from __future__ import annotations
 
+import functools
 import os
 import random
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from spotify_app_etl_spark import io
 from spotify_app_etl_spark.operators import similarity as SM
 from spotify_app_etl_spark.operators.cms import (
     _SKETCH_SCHEMA,
     _merge_batch,
+    cms_build,
+    cms_estimate,
     cms_ingest_batch,
     cms_state_read,
 )
@@ -26,6 +29,23 @@ def _fail_publish(fs, tmp, final):
 
 def _keys(spark):
     return spark.createDataFrame([("a",), ("b",), ("c",)], "tok string")
+
+
+def _corpus(spark, rng, ids):
+    return spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in ids],
+        "corpus_id long, embedding array<double>",
+    )
+
+
+def _layout(path) -> tuple[list[str], list[int]]:
+    """The generation directories and record numbers ``path`` holds."""
+    gens = sorted(n for n in os.listdir(path) if n.startswith("gen="))
+    records = sorted(
+        int(n[:-5]) for n in os.listdir(os.path.join(path, "_commits"))
+        if n.endswith(".json") and not n.startswith(".")
+    )
+    return gens, records
 
 
 def _row0_total(spark, path) -> int:
@@ -91,10 +111,7 @@ def test_index_commit_failure_keeps_previous_generation(spark, tmp_path, monkeyp
     rng = random.Random(5)
 
     def corpus(ids):
-        return spark.createDataFrame(
-            [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in ids],
-            "corpus_id long, embedding array<double>",
-        )
+        return _corpus(spark, rng, ids)
 
     def self_hits(df):
         queries = df.select(F.col("corpus_id").alias("query_id"), "embedding")
@@ -117,6 +134,51 @@ def test_index_commit_failure_keeps_previous_generation(spark, tmp_path, monkeyp
     assert io.read_commit(spark, path)["gen"] == 1
     assert self_hits(first) == before
     assert self_hits(extra) == [(i, i) for i in range(200, 210)]
+
+
+def test_cms_keeps_two_generations_and_two_records(spark, tmp_path):
+    """Each commit deletes what it supersedes except the previous
+    generation: after three batches the path holds gen=2, gen=3 and two
+    records, and the sketch estimates what a one-shot build does."""
+    path = str(tmp_path / "cms")
+    batches = [
+        spark.createDataFrame(
+            [(f"k{i % (b + 3)}",) for i in range(10 * (b + 1))], "tok string"
+        )
+        for b in range(3)
+    ]
+    for b, batch in enumerate(batches):
+        cms_ingest_batch(batch, path, "tok", depth=2, width=64, batch_id=b)
+    assert _layout(path) == (["gen=2", "gen=3"], [2, 3])
+
+    whole = functools.reduce(DataFrame.unionByName, batches)
+    keys = whole.distinct()
+
+    def estimates(sketch):
+        est = cms_estimate(sketch, keys, "tok", depth=2, width=64)
+        return sorted((r.tok, r.est) for r in est.collect())
+
+    sketch, _ = cms_state_read(spark, path)
+    assert estimates(sketch) == estimates(cms_build(whole, "tok", depth=2, width=64))
+
+
+def test_index_rebuild_keeps_two_generations_and_append_deletes_none(spark, tmp_path):
+    """A sign-LSH index keeps the same two generations: three rebuilds
+    leave gen=2 and gen=3, and an append, which commits gen=3 again,
+    deletes no generation and still keeps two records."""
+    rng = random.Random(7)
+    path = str(tmp_path / "lsh")
+    for b in range(3):
+        SM.signlsh_index_write(_corpus(spark, rng, range(b * 20, b * 20 + 20)), path)
+    assert _layout(path) == (["gen=2", "gen=3"], [2, 3])
+    extra = _corpus(spark, rng, range(100, 110))
+    SM.signlsh_index_write(extra, path, mode="append")
+    assert _layout(path) == (["gen=2", "gen=3"], [3, 4])
+    queries = extra.select(F.col("corpus_id").alias("query_id"), "embedding")
+    top = SM.signlsh_index_search(spark, queries, path, k=1).collect()
+    assert sorted((r.query_id, r.corpus_id) for r in top) == [
+        (i, i) for i in range(100, 110)
+    ]
 
 
 def _jobs(spark, group, fn) -> int:

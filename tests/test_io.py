@@ -1,5 +1,5 @@
 """io: stringify compat mode, parquet writer (plain + partitioned),
-typed loaders."""
+typed loaders, driver-held local tables."""
 
 from __future__ import annotations
 
@@ -24,6 +24,38 @@ def test_stringify_types_and_nulls(spark):
     # — documented divergence, SURVEY.md §1.4)
     assert rows["2"].d is None and rows["1"].s is None
     assert rows["1"].d == "1.5" and rows["1"].b == "true"
+
+
+@pytest.mark.parametrize("n", [0, 3])
+def test_local_table_is_a_typed_local_relation(spark, n):
+    """local_table plans as a LocalRelation with the declared types and
+    nullability, empty or not, and keeps its values exactly."""
+    df = io.local_table(
+        spark,
+        {
+            "cell": list(range(n)),
+            "center": [[i / 3, -0.0] for i in range(n)],
+            "tag": [None] * n,
+        },
+        "cell int not null, center array<double> not null, tag string",
+    )
+    assert df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+    # a fresh projection reads the schema back from the JVM's plan
+    assert [
+        (f.name, f.dataType.simpleString(), f.nullable) for f in df.select("*").schema
+    ] == [
+        ("cell", "int", False),
+        ("center", "array<double>", False),
+        ("tag", "string", True),
+    ]
+    assert [tuple(r) for r in df.collect()] == [
+        (i, [i / 3, -0.0], None) for i in range(n)
+    ]
+
+
+def test_local_table_rejects_null_in_not_null_column(spark):
+    with pytest.raises(ValueError, match="not-null column 'cell'"):
+        io.local_table(spark, {"cell": [1, None]}, "cell int not null")
 
 
 def test_write_parquet_roundtrip(spark, tmp_path):

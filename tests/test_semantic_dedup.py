@@ -170,6 +170,15 @@ def test_null_nan_vectors_dropped(spark):
     # invalid-vector rows are never LOST from the corpus — they just
     # can't participate in pairs
     assert {2, 3, 4} <= kept
+    # no valid vector at all (auto sizing gives one cell): an empty
+    # cell-block table, no pairs
+    invalid = df.filter(F.col("vec_id").isin(2, 3, 4))
+    pairs = DD.semantic_dedup_pairs(invalid, "embedding", "vec_id", n_cells="auto")
+    assert pairs.collect() == []
+    kept_invalid = DD.semantic_dedup(
+        invalid, "embedding", "vec_id", n_cells="auto"
+    ).collect()
+    assert {r.vec_id for r in kept_invalid} == {2, 3, 4}
 
 
 def test_auto_cells_sizing_and_recall(spark, emb):
