@@ -19,13 +19,29 @@ Driver-held tables: :func:`local_table`, the one way values held on the
 driver (centroids, codebooks, offsets, a merge list, a JSON page)
 become a table.
 
-Commit records: :func:`write_commit` and :func:`read_commit`, the one
-commit point of the persisted count-min sketch and the sign-LSH, IVF
-and PQ indexes. Each commit is a numbered JSON file under
-``{path}/_commits/``, written by the driver under a temporary name and
-renamed into place; the latest record names the live generation, whose
-directory :func:`generation_dir` names. A commit deletes the
-generations and records it supersedes, keeping the previous one.
+Commit protocol: the one owner of every persisted sketch and index —
+the count-min sketch and the sign-LSH, IVF, PQ and MinHash indexes. A
+writer opens the generation it writes with :func:`open_write` and
+commits it with :meth:`Generation.commit`; a reader opens the live one
+with :func:`open_read`. Each reads the latest commit record once and
+refuses a caller whose pinned parameters (hash family, cell count,
+codebook shape, sketch geometry, vector dim) differ from the stored
+ones, so a batch or query never mixes with a structure built otherwise.
+
+- **Rebuild = new generation** under ``{path}/gen=N/``, then a record
+  naming N. A failure before the record leaves the previous, consistent
+  generation live (never new buckets beside old vectors, or new
+  codebooks beside old codes); a retry rewrites the same N.
+- **Append = into the live generation**, then a record naming it
+  again; rows a failed append leaves are duplicates the searches and
+  the dedup absorb.
+- **Merge = new generation written whole from the live one** (the
+  sketch).
+- **Retention**: a commit deletes the generations before the previous
+  one and all records but the last two (:func:`write_commit`).
+
+Records are numbered JSON files under ``{path}/_commits/``, written by
+the driver under a temporary name and renamed into place.
 
 Scale notes: loads are plain ``spark.read.parquet`` scans — Catalyst
 handles predicate pushdown / column pruning / partition pruning, so at
@@ -40,6 +56,7 @@ import json
 import os
 import re
 import uuid
+from dataclasses import dataclass
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -189,8 +206,107 @@ def stringify(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Commit records: the commit point of every persisted sketch and index
+# Commit protocol: the one commit point of the count-min sketch and the
+# sign-LSH, IVF, PQ and MinHash indexes
 # ---------------------------------------------------------------------------
+
+#: Writer modes; see :func:`open_write`.
+_WRITE_MODES = ("overwrite", "append", "merge")
+
+
+@dataclass(frozen=True)
+class Generation:
+    """The generation a writer opened with :func:`open_write`: ``record``
+    is the latest commit record (None when there is none), ``mode`` how
+    the writer writes its files ("overwrite" into a new generation,
+    "append" into the live one), ``pins`` what the commit records."""
+
+    spark: SparkSession
+    path: str
+    gen: int
+    record: dict | None
+    mode: str
+    pins: dict
+
+    @property
+    def dir(self) -> str:
+        return generation_dir(self.path, self.gen)
+
+    @property
+    def live_dir(self) -> str | None:
+        return None if self.record is None else generation_dir(self.path, self.record["gen"])
+
+    def commit(self, **fields) -> int:
+        """Commit this generation with its pins and ``fields``."""
+        return write_commit(self.spark, self.path, self.gen, **self.pins, **fields)
+
+
+def open_write(
+    spark: SparkSession, path: str, kind: str, mode: str, *,
+    dim: int | None = None, create: bool = True, **pins,
+) -> Generation:
+    """Open the generation a writer of the ``kind`` (``"PQ index"``) at
+    ``path`` writes. ``mode``:
+
+    - ``'overwrite'``: the next generation; nothing is compared.
+    - ``'append'``: the live generation. ``pins`` and ``dim`` must equal
+      the record's, else ``refusing to append`` raises. With no record,
+      generation 1 when ``create`` (an index holding no trained state),
+      else ``no {kind} at {path} to append to`` raises.
+    - ``'merge'``: the next generation, compared like an append.
+
+    Any other mode raises, so a typo (``'Append'``) cannot rebuild the
+    live index from one batch. ``dim`` (None: not recorded) is an
+    embedding index's vector dimension; 0, no valid vector, matches any,
+    and a write onto the live record keeps its dim.
+    """
+    if mode not in _WRITE_MODES:
+        raise ValueError(f"mode must be one of {_WRITE_MODES}, got {mode!r}")
+    record = read_commit(spark, path)
+    if record is not None and mode != "overwrite":
+        _check_pins(record, path, kind, mode, dim, pins)
+        if dim is not None:
+            dim = dim or record["dim"]
+    elif record is None and mode == "append" and not create:
+        raise ValueError(f"no {kind} at {path} to append to")
+    if dim is not None:
+        pins["dim"] = dim
+    if record is not None and mode == "append":
+        return Generation(spark, path, record["gen"], record, "append", pins)
+    gen = record["gen"] + 1 if record is not None else 1
+    return Generation(spark, path, gen, record, "overwrite", pins)
+
+
+def open_read(
+    spark: SparkSession, path: str, kind: str, action: str, *,
+    dim: int = 0, missing_ok: bool = False, **pins,
+) -> tuple[str | None, dict | None]:
+    """The live generation of the ``kind`` at ``path``: its directory and
+    commit record, read on the driver (no Spark job). ``pins`` and ``dim``
+    are compared as by :func:`open_write` (``refusing to {action}``).
+    With no record, ``no {kind} at {path}`` raises, or ``(None, None)``
+    returns when ``missing_ok`` (absence means empty)."""
+    record = read_commit(spark, path)
+    if record is None:
+        if missing_ok:
+            return None, None
+        raise ValueError(f"no {kind} at {path}")
+    _check_pins(record, path, kind, action, dim, pins)
+    return generation_dir(path, record["gen"]), record
+
+
+def _check_pins(record: dict, path: str, kind: str, action: str, dim, pins: dict) -> None:
+    """Raise when ``pins`` or a nonzero ``dim`` differ from ``record``."""
+    given = {k: v for k, v in pins.items() if record.get(k) != v}
+    if dim and record.get("dim") and record["dim"] != dim:
+        given["dim"] = dim
+    if given:
+        stored = " ".join(f"{k}={record.get(k)}" for k in given)
+        asked = " ".join(f"{k}={v}" for k, v in given.items())
+        raise ValueError(
+            f"{kind} at {path} stores {stored}; refusing to {action} with {asked}"
+        )
+
 
 #: A committed record's file name under ``{path}/_commits/``; anything
 #: else there (a temporary name, a checksum file) is not a commit.

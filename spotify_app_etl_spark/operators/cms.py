@@ -145,11 +145,10 @@ def cms_estimate(
 # ---------------------------------------------------------------------------
 # Persisted sketch: generation-committed state for build-once/probe-many
 # and streaming maintenance. Each generation is one parquet file under
-# {path}/gen=N/; a commit record (io.write_commit, the protocol the ANN
-# indexes in operators/similarity.py share) names the live generation,
-# so a write or commit that fails leaves readers, and the next merge,
-# at the previous generation. Each commit deletes the generations
-# before the previous one, so the path holds at most two.
+# {path}/gen=N/, opened and committed through the protocol io owns
+# (io.open_write / io.open_read, shared with the ANN and MinHash
+# indexes): a write or commit that fails leaves readers, and the next
+# merge, at the previous generation, and the path holds at most two.
 # ---------------------------------------------------------------------------
 
 
@@ -158,13 +157,12 @@ def cms_state_read(spark, path: str):
     ``(None, None)`` if nothing is committed yet. Runs no Spark job:
     the record is read on the driver and the generation is opened with
     the sketch's declared schema."""
-    record = io.read_commit(spark, path)
+    gdir, record = io.open_read(
+        spark, path, "count-min sketch", "read", missing_ok=True
+    )
     if record is None:
         return None, None
-    sketch = spark.read.schema(_SKETCH_SCHEMA).parquet(
-        io.generation_dir(path, record["gen"])
-    )
-    return sketch, record
+    return spark.read.schema(_SKETCH_SCHEMA).parquet(gdir), record
 
 
 def _merge_batch(
@@ -209,20 +207,14 @@ def cms_ingest_batch(
     """
     _check_params(depth, width)
     spark = batch_df.sparkSession
-    prev, record = cms_state_read(spark, path)
-    if record is not None:
-        if record["depth"] != depth or record["width"] != width:
-            raise ValueError(
-                f"sketch at {path} is {record['depth']}x{record['width']}; "
-                f"refusing to merge a {depth}x{width} batch into it"
-            )
-        if batch_id is not None and record["last_batch"] == batch_id:
-            return  # re-delivered batch: already committed, skip
-        gen = record["gen"] + 1
-    else:
-        gen = 1
-    merged = _merge_batch(prev, batch_df, key_col, depth, width, weight_col)
-    merged.coalesce(1).write.mode("overwrite").parquet(io.generation_dir(path, gen))
-    io.write_commit(
-        spark, path, gen=gen, depth=depth, width=width, last_batch=batch_id
+    g = io.open_write(
+        spark, path, "count-min sketch", "merge", depth=depth, width=width
     )
+    prev = None
+    if g.record is not None:
+        if batch_id is not None and g.record["last_batch"] == batch_id:
+            return  # re-delivered batch: already committed, skip
+        prev = spark.read.schema(_SKETCH_SCHEMA).parquet(g.live_dir)
+    merged = _merge_batch(prev, batch_df, key_col, depth, width, weight_col)
+    merged.coalesce(1).write.mode(g.mode).parquet(g.dir)
+    g.commit(last_batch=batch_id)

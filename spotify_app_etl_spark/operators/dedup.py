@@ -29,11 +29,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from spotify_app_etl_spark import io
 from spotify_app_etl_spark.operators.checkpoint import local_checkpoint_ser
+from spotify_app_etl_spark.operators.conf import size_conf_bytes
 from spotify_app_etl_spark.operators.persist import scoped_persist
-
-# moved to operators.conf in round 11 (graph.py needs it too); the
-# private name stays bound for dedup-internal call sites
-from spotify_app_etl_spark.operators.conf import size_conf_bytes as _size_conf_bytes
 
 
 def _fan_out(base: DataFrame, want: int) -> DataFrame:
@@ -58,10 +55,10 @@ def _fan_out(base: DataFrame, want: int) -> DataFrame:
     if n_files < want:
         return base.repartition(want)
     spark = base.sparkSession
-    open_cost = _size_conf_bytes(
+    open_cost = size_conf_bytes(
         spark, "spark.sql.files.openCostInBytes", 4 * 1024 * 1024
     )
-    max_pb = _size_conf_bytes(
+    max_pb = size_conf_bytes(
         spark, "spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024
     )
     cores = max(1, spark.sparkContext.defaultParallelism)
@@ -1330,8 +1327,10 @@ def minhash_index_write(
     once per document ever (the expensive Arrow kernel), stored as a
     compact parquet table (id + num_hashes packed bytes ≈ 520 B/doc —
     ~0.5% of a 100 KB document), and every future ingest batch dedups
-    against the index without touching historical text. ``mode=
-    'append'`` is how :func:`minhash_dedup_incremental` grows it.
+    against the index without touching historical text. Generations
+    follow :func:`io.open_write` (an append to a missing index builds
+    generation 1); the record pins ``num_hashes``, ``shingle_k`` and
+    the id type, so other parameters raise instead of keeping copies.
     """
     base = df.select(
         F.col(id_col).alias("__id"), normalized(text_col).alias("__norm")
@@ -1342,7 +1341,43 @@ def minhash_index_write(
         "__id",
         _minhash_text_arrow_udf(num_hashes, shingle_k)("__norm").alias("__sig"),
     )
-    sig.write.mode(mode).parquet(path)
+    _commit_signatures(sig, path, mode, num_hashes, shingle_k)
+
+
+def minhash_index_append(
+    sig: DataFrame, path: str, num_hashes: int = 64, shingle_k: int = 9
+) -> None:
+    """Append ``kept_sig`` of :func:`minhash_dedup_incremental` to the
+    index without re-shingling its text. A retried append adds the same
+    signatures again: extra candidate checks, never a wrong result."""
+    _commit_signatures(sig, path, "append", num_hashes, shingle_k)
+
+
+def _commit_signatures(
+    sig: DataFrame, path: str, mode: str, num_hashes: int, shingle_k: int
+) -> None:
+    g = io.open_write(
+        sig.sparkSession, path, "MinHash index", mode,
+        num_hashes=num_hashes, shingle_k=shingle_k,
+        id_type=sig.schema["__id"].dataType.simpleString(),
+    )
+    sig.write.mode(g.mode).parquet(g.dir)
+    g.commit()
+
+
+def minhash_index_read(
+    spark: SparkSession, path: str, num_hashes: int = 64, shingle_k: int = 9
+) -> DataFrame | None:
+    """The live signature table of the index at ``path``, or None when
+    nothing is committed there. Runs no Spark job: the record is read on
+    the driver and pins the id type the generation is opened with."""
+    gdir, record = io.open_read(
+        spark, path, "MinHash index", "dedup", missing_ok=True,
+        num_hashes=num_hashes, shingle_k=shingle_k,
+    )
+    if record is None:
+        return None
+    return spark.read.schema(f"__id {record['id_type']}, __sig binary").parquet(gdir)
 
 
 def minhash_dedup_incremental(
@@ -1354,11 +1389,10 @@ def minhash_dedup_incremental(
     bands: int = 16,
     threshold: float = 0.5,
     shingle_k: int = 9,
-    update_index: bool = True,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Dedup an ingest batch against the persisted index AND itself;
-    returns the kept new rows (and appends their signatures when
-    ``update_index``).
+    returns ``(kept, kept_sig)``: the kept new rows and their
+    signatures, which :func:`minhash_index_append` adds to the index.
 
     Plan shape: new-batch signatures (one Arrow pass over the BATCH
     only) → band join against the index's banded view → est-Jaccard
@@ -1366,87 +1400,18 @@ def minhash_dedup_incremental(
     removes within-batch near-dups (keeping the min id). Cost scales
     with |batch| + |index ∩ candidate buckets| — history is never
     re-shingled, which is the whole point of keeping the index.
+    ``num_hashes`` and ``shingle_k`` must equal the index's record.
 
-    Hash parameters must equal the index's build parameters — at scale
-    store them beside the index and validate at read (here documented;
-    the signature LENGTH mismatch fails loudly in the band substring).
-
-    Cold start: a missing/empty ``index_path`` is treated as an empty
-    index (within-batch dedup only) and, under ``update_index``, the
-    first batch's surviving signatures bootstrap it — a fresh
-    deployment must not crash on batch 0.
-    """
-    kept, kept_sig = _minhash_dedup_incremental_core(
-        new_docs, index_path, text_col, id_col, num_hashes, bands,
-        threshold, shingle_k,
-    )
-    if update_index:
-        # NOTE: the append is NOT idempotent — retrying a failed batch
-        # appends its surviving signatures again. At scale, write each
-        # batch to a staging subdirectory keyed by a batch id (or use a
-        # table format with atomic commits) and promote once; dup
-        # signatures only cost extra candidate checks, never wrong
-        # results, so the simple append is the registered default.
-        kept_sig.write.mode("append").parquet(index_path)
-    return kept
-
-
-def minhash_dedup_incremental_with_sigs(
-    new_docs: DataFrame,
-    index_path: str,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.5,
-    shingle_k: int = 9,
-) -> tuple[DataFrame, DataFrame]:
-    """:func:`minhash_dedup_incremental` variant returning
-    ``(kept, kept_sig)`` WITHOUT appending to the index.
-
-    For callers that need sink-before-index ordering (the streaming
-    ingest): the survivors' signatures were already computed for the
-    dedup itself, so handing them back lets the caller append them
-    after its sink write instead of re-running the shingling/MinHash
-    Arrow kernel over the surviving text — the dominant per-batch cost,
-    paid once instead of twice. ``kept_sig`` rides on the scoped
+    Cold start: an index with no commit record is empty (within-batch
+    dedup only), and appending batch 0's ``kept_sig`` bootstraps it.
+    A caller needing sink-before-index order (the streaming ingest)
+    appends ``kept_sig`` after its sink write. It rides on the scoped
     signature persist; append it before
     :func:`operators.persist.release_cached`.
     """
-    return _minhash_dedup_incremental_core(
-        new_docs, index_path, text_col, id_col, num_hashes, bands,
-        threshold, shingle_k,
-    )
-
-
-def _index_exists(spark: SparkSession, path: str) -> bool:
-    """Scheme-agnostic "index has data" check: path exists AND holds at
-    least one parquet file (an empty directory — e.g. a touched prefix —
-    is still "no index"). Delegates to io's Hadoop FileSystem helpers so
-    the package has exactly ONE recursive-listing implementation to keep
-    correct across schemes."""
-    from spotify_app_etl_spark.io import _dataset_file_count
-
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    if not jpath.getFileSystem(hconf).exists(jpath):
-        return False
-    return _dataset_file_count(spark, path, suffix=".parquet") > 0
-
-
-def _minhash_dedup_incremental_core(
-    new_docs: DataFrame,
-    index_path: str,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    threshold: float,
-    shingle_k: int,
-) -> tuple[DataFrame, DataFrame]:
     spark = new_docs.sparkSession
     _check_band_params(num_hashes, bands)
+    index_sig = minhash_index_read(spark, index_path, num_hashes, shingle_k)
 
     def banded(sig: DataFrame) -> DataFrame:
         # the SHARED banding helper: index interop requires the
@@ -1465,8 +1430,6 @@ def _minhash_dedup_incremental_core(
         )
     )
     new_sig.count()
-    have_index = _index_exists(spark, index_path)
-    index_sig = spark.read.parquet(index_path) if have_index else None
 
     slot_eq = _binary_slot_eq(num_hashes)
 
@@ -1480,7 +1443,7 @@ def _minhash_dedup_incremental_core(
     # vs index: every (new, indexed) bucket collision, est-verified.
     # No index yet (fresh deployment, batch 0) → nothing to collide
     # with; the within-batch pass below still runs.
-    if have_index:
+    if index_sig is not None:
         vs_index = (
             banded(new_sig)
             .alias("n")
@@ -1803,9 +1766,8 @@ def semantic_losers(pairs: DataFrame, id_col: str, keep: str = "least_central") 
     ).distinct()
 
 
-# Public names for the sizing/fan-out helpers other modules consume
+# Public names for the fan-out helpers other modules consume
 # (plans.indexing, plans.prep, functions.text, functions.multimodal) —
 # cross-module imports should not touch _-prefixed symbols.
-size_conf_bytes = _size_conf_bytes
 fan_out = _fan_out
 cap_buckets = _cap_buckets

@@ -46,15 +46,6 @@ def _valid_vec(v: Column) -> Column:
     )
 
 
-def _require_mode(mode: str) -> None:
-    """Writers accept exactly 'overwrite' | 'append'. Anything else —
-    a typo like 'Append' — would silently fall into the overwrite
-    branch and rebuild the live index from only the new batch,
-    vanishing every previously indexed document."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")
-
-
 # NOTE on parallelism: unlike the minhash text kernel (operators/
 # dedup.py, where per-row shingle hashing dominates and an explicit
 # repartition before the kernel was a measured 3x win), the hyperplane
@@ -541,62 +532,33 @@ def signlsh_index_write(
     vector + norm; the scoring payload) — plus a commit record
     (:func:`io.write_commit`) pinning (planes, tables, seed, dim) and
     the live GENERATION. Every future query batch probes the stored
-    buckets without touching raw corpus embeddings again; ``mode='append'`` is the ingest path for
-    new corpus batches (the hash family is deterministic per
-    (seed, dim), so appended batches land in compatible buckets).
-    Appending with different params than the committed record raises —
-    mixed-family buckets silently lose recall.
-
-    Commit protocol (shared by the sign-LSH, IVF and PQ indexes and
-    the persisted count-min sketch):
-
-    * **Rebuild (overwrite) = new generation.** Tables are written
-      under ``{path}/gen=N/``, then a commit record naming N is renamed
-      into place: a failure anywhere before that rename leaves the
-      latest record at the previous, fully-consistent generation —
-      never at a mix of new buckets and old vectors (or vice versa),
-      which would be searchable but silently wrong. A retried rebuild
-      recomputes the same N and overwrites the orphan.
-    * **Append = into the CURRENT generation, vectors first, buckets
-      last, then a commit record of the same generation.** A doc is
-      only reachable through its bucket rows, so a crash between the
-      writes leaves orphan vector rows (storage waste) rather than
-      bucket rows pointing at nothing; a retry re-appends both and the
-      search-side candidate dedup absorbs the duplicates. The record
-      repeats the stored params, so they can't drift.
-    * **Retention.** Each commit deletes the generations before the
-      previous one and all but the last two records
-      (:func:`io.write_commit`).
+    buckets without touching raw corpus embeddings again;
+    ``mode='append'`` is the ingest path for new corpus batches (the
+    hash family is deterministic per (seed, dim), so appended batches
+    land in compatible buckets), and appending to a missing index
+    builds generation 1. Appending with different params than the
+    committed record raises — mixed-family buckets silently lose
+    recall. Generations and commits follow the protocol :mod:`io` owns
+    (:func:`io.open_write`). An append writes vectors first and buckets last: a doc is only
+    reachable through its bucket rows, so a crash between the writes
+    leaves orphan vector rows (storage waste) rather than bucket rows
+    pointing at nothing; a retry re-appends both and the search-side
+    candidate dedup absorbs the duplicates.
 
     NULL embeddings (and vectors holding NULL/NaN elements) are
     dropped at build: they have no direction to hash or score, and the
     Arrow kernel's null bucket array would otherwise silently produce
     an unreachable vectors row anyway.
     """
-    _require_mode(mode)
-    spark = corpus.sparkSession
-    meta = io.read_commit(spark, path)
-    dim = _first_vec_dim(corpus, vec)
-    if mode == "append" and meta is not None:
-        if (meta["planes"], meta["tables"], meta["seed"]) != (planes, tables, seed):
-            raise ValueError(
-                f"index at {path} was built with planes={meta['planes']} "
-                f"tables={meta['tables']} seed={meta['seed']}; refusing to "
-                f"append planes={planes} tables={tables} seed={seed}"
-            )
-        # dim is part of the hash family: the plane matrix is derived
-        # per (seed, dim), so a batch of different-dim vectors (e.g.
-        # the upstream embedding model changed) would land in an
-        # INCOMPATIBLE family sharing the same int bucket space —
-        # numerically colliding with real buckets and silently
-        # degrading recall. The (planes, tables, seed) guard alone
-        # cannot catch that.
-        _check_index_dim(meta, dim, path, "append")
-        gen, fresh, dim = meta["gen"], False, meta["dim"] or dim
-    else:
-        # overwrite, or append-bootstrap onto a missing index
-        gen, fresh = (meta["gen"] + 1 if meta is not None else 1), True
-    gdir = io.generation_dir(path, gen)
+    # dim is part of the hash family: the plane matrix is derived per
+    # (seed, dim), so a batch of different-dim vectors (the upstream
+    # embedding model changed) would land in an INCOMPATIBLE family
+    # sharing the same int bucket space — numerically colliding with
+    # real buckets and silently degrading recall.
+    g = io.open_write(
+        corpus.sparkSession, path, "sign-LSH index", mode,
+        dim=_first_vec_dim(corpus, vec), planes=planes, tables=tables, seed=seed,
+    )
     bks = _hyperplane_buckets_arrow(tables, planes, seed)
     from pyspark.storagelevel import StorageLevel
 
@@ -628,17 +590,14 @@ def signlsh_index_write(
             )
         ).alias("tb"),
     ).select("corpus_id", "tb.tbl", "tb.bkt")
-    wmode = "overwrite" if fresh else "append"
     try:
-        c0.select("corpus_id", "v", "norm").write.mode(wmode).parquet(
-            f"{gdir}/vectors"
+        c0.select("corpus_id", "v", "norm").write.mode(g.mode).parquet(
+            f"{g.dir}/vectors"
         )
-        buckets.write.mode(wmode).parquet(f"{gdir}/buckets")
+        buckets.write.mode(g.mode).parquet(f"{g.dir}/buckets")
     finally:
         c0.unpersist()
-    io.write_commit(
-        spark, path, planes=planes, tables=tables, seed=seed, gen=gen, dim=dim
-    )
+    g.commit()
 
 
 def _first_vec_dim(df: DataFrame, vec: str) -> int:
@@ -652,19 +611,6 @@ def _first_vec_dim(df: DataFrame, vec: str) -> int:
         .first()
     )
     return int(row["d"]) if row is not None else 0
-
-
-def _check_index_dim(meta: dict, dim: int, path: str, action: str) -> None:
-    """Refuse a dim mismatch against the committed record. dim=0 (an
-    index built from, or a batch of, no valid vectors) has nothing to
-    mismatch."""
-    stored = meta["dim"]
-    if stored and dim and stored != dim:
-        raise ValueError(
-            f"index at {path} stores {stored}-dim vectors; refusing to "
-            f"{action} with {dim}-dim vectors (different hash family / "
-            f"centroid space — a silent recall loss, not a compatible mix)"
-        )
 
 
 def signlsh_index_search(
@@ -687,15 +633,13 @@ def signlsh_index_search(
     dedup absorbs the duplicate rows a crashed-then-retried append
     leaves (identical scores, exact to drop).
     """
-    meta = io.read_commit(spark, path)
-    if meta is None:
-        raise ValueError(f"no sign-LSH index at {path}")
     # query dim must match the stored hash family (plane matrix is
     # per-dim); mismatched queries would probe numerically-colliding
     # but semantically-unrelated buckets — silent garbage, not an error
-    _check_index_dim(meta, _first_vec_dim(queries, vec), path, "search")
+    gdir, meta = io.open_read(
+        spark, path, "sign-LSH index", "search", dim=_first_vec_dim(queries, vec)
+    )
     planes, tables, seed = meta["planes"], meta["tables"], meta["seed"]
-    gdir = io.generation_dir(path, meta["gen"])
     buckets = spark.read.parquet(f"{gdir}/buckets")
     vectors = spark.read.parquet(f"{gdir}/vectors")
 
@@ -739,8 +683,8 @@ def ivf_index_write(
     the in-memory :func:`cosine_topk_ivf` must) is exactly what a
     production pipeline avoids. Stored tables: ``centroids`` (cell id +
     center vector), ``assigned`` (corpus_id, cell, normalized vector +
-    norm), under a GENERATION directory named by a commit record —
-    same protocol as :func:`signlsh_index_write`: a crash mid-rebuild
+    norm), under a GENERATION directory named by a commit record (the
+    protocol :func:`io.open_write` owns): a crash mid-rebuild
     can never leave new centroids paired with old assignments (cells
     ranked by one clustering, members fetched from another — silently
     wrong neighbors); the latest record still names the old,
@@ -754,29 +698,19 @@ def ivf_index_write(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    _require_mode(mode)
     spark = corpus.sparkSession
     c_feat = corpus.filter(_valid_vec(F.col(vec))).select(
         F.col(corpus_id).alias("corpus_id"), _as_double(F.col(vec)).alias("v")
     ).withColumn("__features", array_to_vector(F.col("v")))
-    dim = _first_vec_dim(corpus, vec)
-
-    meta = io.read_commit(spark, path)
-    if mode == "append":
-        if meta is None:
-            raise ValueError(f"no IVF index at {path} to append to")
-        if meta["n_cells"] != n_cells:
-            raise ValueError(
-                f"index at {path} has {meta['n_cells']} cells; refusing to "
-                f"append with n_cells={n_cells}"
-            )
-        # appending different-dim vectors against the stored centroids
-        # either crashes the distance kernel or assigns cells from
-        # all-NULL distances — fail loudly instead
-        _check_index_dim(meta, dim, path, "append")
-        gen, dim = meta["gen"], meta["dim"] or dim
-        gdir = io.generation_dir(path, gen)
-        stored = spark.read.parquet(f"{gdir}/centroids").collect()
+    # appending different-dim vectors against the stored centroids
+    # either crashes the distance kernel or assigns cells from all-NULL
+    # distances — fail loudly instead
+    g = io.open_write(
+        spark, path, "IVF index", mode, dim=_first_vec_dim(corpus, vec),
+        create=False, n_cells=n_cells,
+    )
+    if g.mode == "append":
+        stored = spark.read.parquet(f"{g.dir}/centroids").collect()
         centers = [list(r["center"]) for r in sorted(stored, key=lambda r: r["cell"])]
 
         # _cell_rank: the SAME ranking the search side uses — appended
@@ -789,8 +723,6 @@ def ivf_index_write(
             .alias("cell"),
         )
     else:
-        gen = meta["gen"] + 1 if meta is not None else 1
-        gdir = io.generation_dir(path, gen)
         model = KMeans(
             k=n_cells, seed=seed, maxIter=8, featuresCol="__features"
         ).fit(c_feat)
@@ -800,19 +732,17 @@ def ivf_index_write(
             {"cell": list(range(len(centers))), "center": centers},
             "cell int not null, center array<double> not null",
         )
-        cent_df.coalesce(1).write.mode("overwrite").parquet(f"{gdir}/centroids")
+        cent_df.coalesce(1).write.mode("overwrite").parquet(f"{g.dir}/centroids")
         assigned = model.transform(c_feat).select(
             "corpus_id", "v", F.col("prediction").cast("int").alias("cell")
         )
 
     assigned.withColumn("norm", l2_norm(F.col("v"))).select(
         "corpus_id", "cell", "v", "norm"
-    ).write.mode("append" if mode == "append" else "overwrite").parquet(
-        f"{gdir}/assigned"
-    )
+    ).write.mode(g.mode).parquet(f"{g.dir}/assigned")
     # the commit point: the record names the new generation only after
     # BOTH tables exist and are internally consistent
-    io.write_commit(spark, path, n_cells=n_cells, seed=seed, gen=gen, dim=dim)
+    g.commit(seed=seed)
 
 
 def ivf_index_search(
@@ -833,13 +763,11 @@ def ivf_index_search(
     comes from the latest commit record, so a mid-rebuild crash can
     never serve mixed centroid/assignment state.
     """
-    meta = io.read_commit(spark, path)
-    if meta is None:
-        raise ValueError(f"no IVF index at {path}")
     # mismatched query dim vs the stored centroid space is silent
     # garbage (or a kernel crash), never a compatible probe
-    _check_index_dim(meta, _first_vec_dim(queries, vec), path, "search")
-    gdir = io.generation_dir(path, meta["gen"])
+    gdir, _ = io.open_read(
+        spark, path, "IVF index", "search", dim=_first_vec_dim(queries, vec)
+    )
     stored = spark.read.parquet(f"{gdir}/centroids").collect()
     centers = {r["cell"]: list(r["center"]) for r in stored}
     assigned = spark.read.parquet(f"{gdir}/assigned")
@@ -1205,11 +1133,11 @@ def pq_index_write(
     tables under a generation directory: ``codebooks`` (subspace,
     entry, center), ``codes`` (corpus_id, codes), ``vectors``
     (corpus_id, v, norm — the re-rank side), named by a commit record
-    exactly like :func:`signlsh_index_write` / :func:`ivf_index_write`:
-    a crash mid-rebuild can never pair new codebooks with old codes
-    (codes are meaningless under the wrong codebook — silently garbage
-    ADC scores), because the latest record still names the old,
-    internally-consistent generation.
+    (the protocol :func:`io.open_write` owns): a crash mid-rebuild can
+    never pair new codebooks with old codes (codes are meaningless
+    under the wrong codebook — silently garbage ADC scores), because
+    the latest record still names the old, internally-consistent
+    generation.
 
     ``mode='append'`` encodes a NEW batch against the CURRENT
     generation's codebooks (no retrain — quantization drifts only if
@@ -1219,30 +1147,19 @@ def pq_index_write(
     search-side dedup. NULL/NaN vectors are dropped at build, the
     module-wide convention.
     """
-    _require_mode(mode)
     spark = corpus.sparkSession
     c0 = corpus.filter(_valid_vec(F.col(vec))).select(
         F.col(corpus_id).alias("corpus_id"), _as_double(F.col(vec)).alias("v")
     )
     dim = _first_vec_dim(corpus, vec)
-
-    meta = io.read_commit(spark, path)
-    if mode == "append":
-        if meta is None:
-            raise ValueError(f"no PQ index at {path} to append to")
-        if meta["m"] != m or meta["ksub"] != ksub:
-            raise ValueError(
-                f"index at {path} stores m={meta['m']}, ksub={meta['ksub']}; "
-                f"refusing to append with m={m}, ksub={ksub} (codes are "
-                f"meaningless across codebook shapes)"
-            )
-        _check_index_dim(meta, dim, path, "append")
-        gen, dim = meta["gen"], meta["dim"] or dim
-        gdir = io.generation_dir(path, gen)
-        books = _read_codebooks(spark, gdir)
+    # an append must keep the stored codebook shape: codes are
+    # meaningless across shapes
+    g = io.open_write(
+        spark, path, "PQ index", mode, dim=dim, create=False, m=m, ksub=ksub
+    )
+    if g.mode == "append":
+        books = _read_codebooks(spark, g.dir)
     else:
-        gen = meta["gen"] + 1 if meta is not None else 1
-        gdir = io.generation_dir(path, gen)
         if books is None:
             books = pq_train(
                 corpus,
@@ -1269,10 +1186,9 @@ def pq_index_write(
             },
             "subspace int not null, entry int not null, center array<double> not null",
         )
-        cb_df.coalesce(1).write.mode("overwrite").parquet(f"{gdir}/codebooks")
+        cb_df.coalesce(1).write.mode("overwrite").parquet(f"{g.dir}/codebooks")
 
     encode = _pq_encode_arrow(books)
-    wmode = "append" if mode == "append" else "overwrite"
     # Zero vectors are excluded from BOTH tables (the encode kernel
     # returns NULL for them — no direction to quantize; see
     # _pq_normalize); filtering on the vector side keeps codes and
@@ -1281,11 +1197,11 @@ def pq_index_write(
     # Two writes share only the narrow (id, v) scan; the Arrow encode
     # kernel runs once (codes write only), so no cross-write persist is
     # needed here, unlike the sign-LSH build.
-    c1.write.mode(wmode).parquet(f"{gdir}/vectors")
+    c1.write.mode(g.mode).parquet(f"{g.dir}/vectors")
     c1.select("corpus_id", encode(F.col("v")).alias("codes")).write.mode(
-        wmode
-    ).parquet(f"{gdir}/codes")
-    io.write_commit(spark, path, m=m, ksub=ksub, seed=seed, gen=gen, dim=dim)
+        g.mode
+    ).parquet(f"{g.dir}/codes")
+    g.commit(seed=seed)
 
 
 def _read_codebooks(spark, gdir: str):
@@ -1329,12 +1245,10 @@ def pq_index_search(
     both in the shortlist (dropDuplicates pre-window) and in the
     re-rank (:func:`_score_topk` ``dedup=True``).
     """
-    meta = io.read_commit(spark, path)
-    if meta is None:
-        raise ValueError(f"no PQ index at {path}")
-    _check_index_dim(meta, _first_vec_dim(queries, vec), path, "search")
+    gdir, meta = io.open_read(
+        spark, path, "PQ index", "search", dim=_first_vec_dim(queries, vec)
+    )
     ksub = meta["ksub"]
-    gdir = io.generation_dir(path, meta["gen"])
     books = _read_codebooks(spark, gdir)
     codes = spark.read.parquet(f"{gdir}/codes")
     vectors = spark.read.parquet(f"{gdir}/vectors")

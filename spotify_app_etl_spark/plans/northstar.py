@@ -598,16 +598,13 @@ def ns_dedup_minhash_incremental(
     # Fixed self-clearing scratch path — see ns_sim_topk_lsh_indexed.
     idx = _scratch_index_dir(spark, "minhash") + "/sig"
     DD.minhash_index_write(history, "text", "doc_id", idx)
-    kept = DD.minhash_dedup_incremental(
-        batch, idx, "text", "doc_id", update_index=True
-    )
+    kept, kept_sig = DD.minhash_dedup_incremental(batch, idx, "text", "doc_id")
+    DD.minhash_index_append(kept_sig, idx)
     if not verify:
         # rider-free arm (perfbench): build + dedup-vs-index+self +
         # append is the operator; the idempotence rerun is the proof
         return kept.select("doc_id").withColumn("src", F.lit("batch_kept"))
-    rerun, _ = DD.minhash_dedup_incremental_with_sigs(
-        batch, idx, "text", "doc_id"
-    )
+    rerun, _ = DD.minhash_dedup_incremental(batch, idx, "text", "doc_id")
     idempotent = rerun.agg((F.count(F.lit(1)) == F.lit(0)).alias("idempotent_ok"))
     return (
         kept.select("doc_id")
@@ -660,9 +657,7 @@ def ns_streaming_dedup_ingest(
         # rider-free arm (perfbench): source→foreachBatch dedup→sink is
         # the operator; the rerun-idempotence pass below is the proof
         return kept.select("doc_id").withColumn("src", F.lit("stream_kept"))
-    rerun, _ = DD.minhash_dedup_incremental_with_sigs(
-        batch, idx, "text", "doc_id"
-    )
+    rerun, _ = DD.minhash_dedup_incremental(batch, idx, "text", "doc_id")
     idempotent = rerun.agg((F.count(F.lit(1)) == F.lit(0)).alias("idempotent_ok"))
     return (
         kept.select("doc_id")

@@ -90,11 +90,8 @@ def _ship_package(spark: SparkSession) -> None:
     for all subsequently launched tasks — on a real cluster exactly as
     in local mode.
     """
-    try:
-        sc = spark.sparkContext
-        app = sc.applicationId
-    except Exception:
-        return
+    sc = spark.sparkContext
+    app = sc.applicationId
     if app in _SHIPPED:
         return
     pkg_dir = Path(__file__).resolve().parent
@@ -117,9 +114,10 @@ def _ship_package(spark: SparkSession) -> None:
         # ModuleNotFoundErrors. On failure the next configure_session
         # call simply tries again.
         _SHIPPED.add(app)
-    except Exception:
-        # Best effort: when the package is importable from the worker's
-        # cwd/PYTHONPATH anyway (tests, bench) nothing is lost.
+    except OSError:
+        # Best effort on the filesystem: when the package is importable
+        # from the worker's cwd/PYTHONPATH anyway (tests, bench) nothing
+        # is lost. A refusal by Spark itself raises.
         pass
 
 

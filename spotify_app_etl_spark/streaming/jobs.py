@@ -395,9 +395,9 @@ def streaming_dedup_ingest(
     Each micro-batch dedups against (a) all previously indexed
     documents and (b) itself, writes the surviving documents to
     ``out_path``, and only THEN appends the survivors' signatures to
-    the index. State lives in the index parquet, NOT the streaming
-    state store: the stream restarts cold with full dedup history, and
-    batch jobs share the same index.
+    the index's live generation. State lives in the committed index,
+    NOT the streaming state store: the stream restarts cold with full
+    dedup history, and batch jobs share the same index.
 
     Ordering is load-bearing for retries: if the index append ran
     FIRST and the sink write failed, the re-run would find every
@@ -414,13 +414,13 @@ def streaming_dedup_ingest(
     from spotify_app_etl_spark.operators.persist import cache_scope
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         # The dedup already computed every survivor's signature (the
         # dominant per-batch cost: shingling + 64-hash MinHash over full
         # text); take them back instead of re-deriving from raw text.
-        # A fresh deployment's batch 0 bootstraps the index (missing
-        # path == empty index inside the dedup core).
+        # A fresh deployment's batch 0 bootstraps the index (no commit
+        # record == empty index). An empty micro-batch runs like any
+        # other rather than being probed for rows first, which would
+        # cost every batch one more Spark job.
         # cache_scope, not the global release_cached(): this callback
         # runs on the streaming microbatch thread, and the process may
         # be running OTHER jobs concurrently (an ETL pipeline, a rank
@@ -431,14 +431,14 @@ def streaming_dedup_ingest(
         # retry would otherwise persist another signature table
         # (unbounded cache growth across a flaky outage).
         with cache_scope():
-            kept, kept_sig = DD.minhash_dedup_incremental_with_sigs(
+            kept, kept_sig = DD.minhash_dedup_incremental(
                 batch_df, index_path, text_col, id_col, threshold=threshold
             )
             # kept and kept_sig agree by construction: both derive from
             # the same eagerly-checkpointed drop set and the persisted
             # batch signatures, so no extra pinning join is needed.
             kept.write.mode("append").parquet(out_path)
-            kept_sig.write.mode("append").parquet(index_path)
+            DD.minhash_index_append(kept_sig, index_path)
 
     return stream_to_batch_sink(
         docs_stream,

@@ -1,6 +1,7 @@
-"""Commit records (``io.write_commit`` / ``io.read_commit``): the one
-commit point of the persisted count-min sketch and the sign-LSH, IVF
-and PQ indexes."""
+"""Commit records (``io.write_commit`` / ``io.read_commit``) and the
+protocol around them (``io.open_write`` / ``io.open_read``): the one
+commit point of the persisted count-min sketch and the sign-LSH, IVF,
+PQ and MinHash indexes."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import pytest
 from pyspark.sql import DataFrame, functions as F
 
 from spotify_app_etl_spark import io
+from spotify_app_etl_spark.operators import dedup as DD
 from spotify_app_etl_spark.operators import similarity as SM
 from spotify_app_etl_spark.operators.cms import (
     _SKETCH_SCHEMA,
@@ -21,6 +23,7 @@ from spotify_app_etl_spark.operators.cms import (
     cms_ingest_batch,
     cms_state_read,
 )
+from spotify_app_etl_spark.operators.persist import release_cached
 
 
 def _fail_publish(fs, tmp, final):
@@ -36,6 +39,25 @@ def _corpus(spark, rng, ids):
         [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in ids],
         "corpus_id long, embedding array<double>",
     )
+
+
+def _docs(spark, sf_dir):
+    return io.load_table(spark, sf_dir, "documents").select("doc_id", "text")
+
+
+def _near_copies(docs, ids):
+    """Docs ``ids`` with a word appended, under ids shifted by 10,000."""
+    return docs.filter(F.col("doc_id").isin(list(ids))).select(
+        (F.col("doc_id") + 10_000).alias("doc_id"),
+        F.concat("text", F.lit(" extra")).alias("text"),
+    )
+
+
+def _kept_ids(batch, path, **params) -> set[int]:
+    kept, _ = DD.minhash_dedup_incremental(batch, path, "text", "doc_id", **params)
+    ids = {r.doc_id for r in kept.select("doc_id").collect()}
+    release_cached()
+    return ids
 
 
 def _layout(path) -> tuple[list[str], list[int]]:
@@ -136,6 +158,42 @@ def test_index_commit_failure_keeps_previous_generation(spark, tmp_path, monkeyp
     assert self_hits(extra) == [(i, i) for i in range(200, 210)]
 
 
+def test_minhash_commit_failure_keeps_previous_generation(spark, sf_dir, tmp_path, monkeypatch):
+    """A MinHash rebuild whose commit fails leaves the previous
+    generation live: a dedup against it still drops near-copies of the
+    docs it holds. (An overwrite used to delete the live index before
+    its job ran.)"""
+    docs = _docs(spark, sf_dir)
+    path = str(tmp_path / "mh")
+    DD.minhash_index_write(docs.filter("doc_id < 100"), "text", "doc_id", path)
+    with monkeypatch.context() as m:
+        m.setattr(io, "_publish", _fail_publish)
+        with pytest.raises(OSError, match="injected"):
+            DD.minhash_index_write(
+                docs.filter("doc_id >= 200 AND doc_id < 300"), "text", "doc_id", path
+            )
+    assert io.read_commit(spark, path)["gen"] == 1
+    kept = _kept_ids(_near_copies(docs, range(30)), path)
+    assert sum(1 for i in range(10_000, 10_030) if i in kept) <= 3
+
+
+def test_minhash_index_refuses_other_hash_parameters(spark, sf_dir, tmp_path):
+    """Appending to the index, or deduping against it, with another
+    ``shingle_k`` or ``num_hashes`` raises: signatures from another
+    shingling or length never match, so near-copies would be kept."""
+    docs = _docs(spark, sf_dir)
+    path = str(tmp_path / "mh")
+    DD.minhash_index_write(docs.filter("doc_id < 100"), "text", "doc_id", path)
+    batch = _near_copies(docs, range(30))
+    for params in ({"shingle_k": 5}, {"num_hashes": 32}):
+        with pytest.raises(ValueError, match="refusing to append"):
+            DD.minhash_index_write(batch, "text", "doc_id", path, mode="append", **params)
+        with pytest.raises(ValueError, match="refusing to dedup"):
+            _kept_ids(batch, path, **params)
+    assert io.read_commit(spark, path)["gen"] == 1
+    assert DD.minhash_index_read(spark, path).count() == 100
+
+
 def test_cms_keeps_two_generations_and_two_records(spark, tmp_path):
     """Each commit deletes what it supersedes except the previous
     generation: after three batches the path holds gen=2, gen=3 and two
@@ -162,10 +220,10 @@ def test_cms_keeps_two_generations_and_two_records(spark, tmp_path):
     assert estimates(sketch) == estimates(cms_build(whole, "tok", depth=2, width=64))
 
 
-def test_index_rebuild_keeps_two_generations_and_append_deletes_none(spark, tmp_path):
-    """A sign-LSH index keeps the same two generations: three rebuilds
-    leave gen=2 and gen=3, and an append, which commits gen=3 again,
-    deletes no generation and still keeps two records."""
+def test_index_rebuild_keeps_two_generations_and_append_deletes_none(spark, sf_dir, tmp_path):
+    """The sign-LSH and MinHash indexes keep the same two generations:
+    three rebuilds leave gen=2 and gen=3, and an append, which commits
+    gen=3 again, deletes no generation and still keeps two records."""
     rng = random.Random(7)
     path = str(tmp_path / "lsh")
     for b in range(3):
@@ -179,6 +237,22 @@ def test_index_rebuild_keeps_two_generations_and_append_deletes_none(spark, tmp_
     assert sorted((r.query_id, r.corpus_id) for r in top) == [
         (i, i) for i in range(100, 110)
     ]
+
+    docs = _docs(spark, sf_dir)
+    path = str(tmp_path / "mh")
+    for b in range(3):
+        batch = docs.filter((F.col("doc_id") >= b * 20) & (F.col("doc_id") < b * 20 + 20))
+        DD.minhash_index_write(batch, "text", "doc_id", path)
+    assert _layout(path) == (["gen=2", "gen=3"], [2, 3])
+    _, kept_sig = DD.minhash_dedup_incremental(
+        docs.filter("doc_id >= 100 AND doc_id < 110"), path, "text", "doc_id"
+    )
+    DD.minhash_index_append(kept_sig, path)
+    assert _layout(path) == (["gen=2", "gen=3"], [3, 4])
+    live = DD.minhash_index_read(spark, path)
+    assert live.filter("__id < 100").count() == 20
+    assert live.filter("__id >= 100").count() == kept_sig.count()
+    release_cached()
 
 
 def _jobs(spark, group, fn) -> int:
@@ -213,3 +287,16 @@ def test_cms_state_read_runs_no_job_and_ingest_only_its_write(spark, tmp_path):
     )
     assert write > 0
     assert ingest == write
+
+
+def test_minhash_index_read_runs_no_job(spark, sf_dir, tmp_path):
+    """The live signature table opens with the schema its record pins,
+    so opening it runs no Spark job (an inferred read runs one)."""
+    path = str(tmp_path / "mh")
+    DD.minhash_index_write(_docs(spark, sf_dir).filter("doc_id < 20"), "text", "doc_id", path)
+    opened = []
+    assert _jobs(
+        spark, "test-mh-read", lambda: opened.append(DD.minhash_index_read(spark, path))
+    ) == 0
+    assert opened[0].schema.simpleString() == "struct<__id:bigint,__sig:binary>"
+    assert DD.minhash_index_read(spark, str(tmp_path / "none")) is None

@@ -403,9 +403,10 @@ def test_minhash_incremental_dedup_against_index(spark, tmp_path):
     )
     batch2 = novel.unionByName(near_copies).unionByName(within_dup)
 
-    kept = DD.minhash_dedup_incremental(
+    kept, kept_sig = DD.minhash_dedup_incremental(
         batch2, idx, "text", "doc_id", threshold=0.5
     )
+    DD.minhash_index_append(kept_sig, idx)
     kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
     release_cached()
 
@@ -418,7 +419,7 @@ def test_minhash_incremental_dedup_against_index(spark, tmp_path):
     # small number of true-positive drops among them)
     assert sum(1 for i in range(250, 300) if i in kept_ids) >= 45
     # index grew by exactly the kept signatures
-    n_index = spark.read.parquet(idx).count()
+    n_index = DD.minhash_index_read(spark, idx).count()
     assert n_index == 250 + len(kept_ids)
 
 
@@ -516,7 +517,10 @@ def test_minhash_incremental_kept_immune_to_index_refresh(spark, tmp_path):
     DD.minhash_index_write(docs.filter(F.col("doc_id") < 100), "text", "doc_id", idx)
 
     batch = docs.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 150))
-    kept = DD.minhash_dedup_incremental(batch, idx, "text", "doc_id", threshold=0.5)
+    kept, kept_sig = DD.minhash_dedup_incremental(
+        batch, idx, "text", "doc_id", threshold=0.5
+    )
+    DD.minhash_index_append(kept_sig, idx)
     # simulate a re-listed parquet file index after the append
     spark.catalog.refreshByPath(idx)
     kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}

@@ -15,6 +15,8 @@ import tempfile
 import zipfile
 from pathlib import Path
 
+import pytest
+
 from spotify_app_etl_spark import session as S
 
 
@@ -55,6 +57,20 @@ def test_ship_package_once_per_application(spark):
     before = _zip_path(spark).stat().st_mtime_ns
     S._ship_package(spark)  # second call: no rebuild, no re-register error
     assert _zip_path(spark).stat().st_mtime_ns == before
+
+
+def test_ship_package_raises_when_spark_refuses_the_zip(spark, monkeypatch):
+    """Only filesystem failures are forgiven: a refusal by Spark itself
+    must not leave the executors silently without the package."""
+
+    def refuse(path):
+        raise RuntimeError(f"addPyFile refused {path}")
+
+    S._ship_package(spark)
+    monkeypatch.setattr(S, "_SHIPPED", set())
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", refuse)
+    with pytest.raises(RuntimeError, match="refused"):
+        S._ship_package(spark)
 
 
 # ---------------------------------------------------------------------------

@@ -400,7 +400,7 @@ def test_streaming_dedup_ingest_against_persisted_index(spark, tmp_path):
     # exact copies of batch A's survivors are dropped via the appended index
     assert sum(1 for i in range(60_100, 60_120) if i in kept) <= 1
     # index grew beyond the initial 100 signatures
-    assert spark.read.parquet(idx).count() >= 100 + len(kept)
+    assert DD.minhash_index_read(spark, idx).count() >= 100 + len(kept)
 
 
 def test_streaming_dedup_ingest_cold_start_bootstraps_index(spark, tmp_path):
@@ -410,6 +410,7 @@ def test_streaming_dedup_ingest_cold_start_bootstraps_index(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from spotify_app_etl_spark.io import load_table
+    from spotify_app_etl_spark.operators import dedup as DD
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         "doc_id", "text"
@@ -446,4 +447,4 @@ def test_streaming_dedup_ingest_cold_start_bootstraps_index(spark, tmp_path):
     assert not any(i in kept for i in range(70_000, 70_002))  # within-batch dups
     assert sum(1 for i in range(80_000, 80_010) if i in kept) <= 1  # vs bootstrap
     # index exists now and holds one signature per survivor
-    assert spark.read.parquet(idx).count() == len(kept)
+    assert DD.minhash_index_read(spark, idx).count() == len(kept)
